@@ -21,7 +21,7 @@ object PlanDump {
     "q12_join_left" -> "fact-fact join shuffles both sides on the key once (SortMergeJoin, AQE-coalesced)",
     "q16_window_topn" -> "one Exchange on the window partition key, in-partition sort, rank, filter",
     "q38_events_asof" -> "as-of join = union + in-partition sort + running max — no range cross-product",
-    "q47_dedup_minhash" -> "one-pass minhash Aggregator, band explode, equi-join on (band, bucket) — never all-pairs",
+    "q47_dedup_minhash" -> "native minhash_sig projection (no doc_id shuffle), band explode, equi-join on (band, bucket) — never all-pairs",
     "q52_embed_neardup" -> "fused lsh_buckets projection, shuffled equi-join on (table, bucket) carrying ids only",
     "q50_knn_brute" -> "query side broadcast (BroadcastNestedLoopJoin), corpus streams through fused cosine",
     "q56_events_session_window" -> "session window aggregation with merge-capable session state",
@@ -358,7 +358,7 @@ object PlanDump {
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
       // custom Aggregator instances and closure objects render with
-      // JVM identity tokens (Sketches$MinHashAgg@4225b4e2,
+      // JVM identity tokens (Sketches$SimHashAgg@4225b4e2,
       // $$Lambda$5681/0x00007f…@4410d01e) — the only run-dependent
       // strings in an otherwise deterministic dump; normalize them so
       // regenerate-and-diff (tools/round_gate.py) is a real check

@@ -408,7 +408,9 @@ object Dedup {
 
   /** MinHash signature: for each of `numHashes` seeded murmur3 functions,
     * the min hash over the document's shingle set. One aggregation —
-    * signatures never leave the executors un-reduced. */
+    * signatures never leave the executors un-reduced. The composed
+    * reference the native [[graft.functions.MinHashSig]] kernel behind
+    * [[bandedSignatures]] must equal bit for bit. */
   def minhashSignatures(documents: DataFrame, n: Int, numHashes: Int): DataFrame = {
     val sh = shingles(documents, n)
     val mins = (0 until numHashes).map(seed =>
@@ -418,23 +420,32 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"h$i")): _*).as("signature"))
   }
 
-  /** One-pass MinHash via the custom [[graft.functions.Sketches]]
-    * aggregator: one primitive buffer per group instead of `numHashes`
-    * aggregation columns — same signature bit-for-bit (tested). */
-  def minhashSignaturesOnePass(documents: DataFrame, n: Int, numHashes: Int): DataFrame =
-    shingles(documents, n).groupBy(col("doc_id"))
-      .agg(graft.functions.Sketches.minhashAgg(col("shingle"), numHashes).as("signature"))
-
   /** (band, bucket, signature) rows per document: the LSH banding key
     * table both pair generation and corpus-admission probe against.
+    * ONE projection over the documents — the native
+    * [[graft.functions.MinHashSig]] kernel computes each row's whole
+    * signature from its text bytes (bit-identical to
+    * [[minhashSignatures]], equality-tested), so there is no shingle
+    * explode and no shuffle — then the posexplode of bands. Documents
+    * with fewer than `n` tokens have no shingle and get no band rows.
+    *
+    * `doc_id` is the key: one input row gives one signature, so the
+    * input must carry each `doc_id` once (the composed form's
+    * groupBy(doc_id) would silently merge the shingle sets of repeated
+    * ids into one signature; this form keeps one per row).
     * `private[graft]` so the stress harness can time the band build as
     * its own stage (dup_mass_stages). */
   private[graft] def bandedSignatures(documents: DataFrame, n: Int,
                                bands: Int, rowsPerBand: Int): DataFrame =
-    minhashSignaturesOnePass(documents, n, bands * rowsPerBand)
+    documents.select(col("doc_id"), graft.functions.MinHashSig
+        .minhashSig(col("text"), n, bands * rowsPerBand).as("signature"))
+      // an empty signature's bands are null and explode to no rows; a
+      // filter on the signature would be pushed below the projection
+      // and run the kernel twice per document
       .select(col("doc_id"), col("signature"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("signature"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+        posexplode(when(size(col("signature")) > 0,
+          transform(sequence(lit(0), lit(bands - 1)),
+            b => hash(slice(col("signature"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** MinHash + LSH banding: split signatures into `bands` bands of
@@ -652,7 +663,9 @@ object Dedup {
     admitAgainst(corpusBands, incoming, n, bands, rowsPerBand, minEstJaccard)
 
   /** Public banded signature rows — the index-maintenance unit the
-    * streaming admission sink appends per batch. */
+    * streaming admission sink appends per batch. One projection of
+    * `documents`, no shuffle (see [[bandedSignatures]]): `doc_id` must
+    * be unique in the input, one row gives one signature. */
   def bandRows(documents: DataFrame, n: Int, bands: Int,
                rowsPerBand: Int): DataFrame =
     bandedSignatures(documents, n, bands, rowsPerBand)

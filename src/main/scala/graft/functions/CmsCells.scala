@@ -15,8 +15,9 @@ import org.apache.spark.sql.GraftBridge
   * row — and Spark's seed-chained xxhash64 re-hashes the token's full
   * UTF-8 bytes on every call although only the final
   * `XXH64.hashInt(r, ·)` mix depends on `r`. This expression hoists the
-  * seed-42 byte hash out of the depth loop (the MinHashAgg discipline,
-  * r18 E1) and returns the whole cell vector, so the depth-way
+  * seed-42 byte hash out of the depth loop (the discipline
+  * [[MinHashSig]] applies per shingle: hash the bytes once, mix per
+  * seed) and returns the whole cell vector, so the depth-way
   * `unionByName` over the token-count stream collapses to ONE
   * projection + posexplode. Bit-identical by the chain law
   * `xxhash64(token, lit(r)) = XXH64.hashInt(r, XXH64(bytes, 42))`,

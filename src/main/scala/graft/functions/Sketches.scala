@@ -4,70 +4,24 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Custom sketch aggregators (SURVEY.md §7.3's "optional
   * TypedImperativeAggregate" extension point, via the public
   * `Aggregator` API).
   *
-  * Why custom: the composed-operator forms in [[graft.dedup.Dedup]]
-  * compute a k-hash MinHash as k separate `min(hash(...))` aggregates and
-  * a SimHash as 64 conditional sums — correct, but k/64 aggregation
-  * buffers per group. These one-pass aggregators keep a single primitive
-  * array buffer per group: less shuffle payload, one pass, same result
-  * (bit-for-bit — asserted in tests against the composed forms).
+  * Why custom: the composed-operator forms in [[graft.dedup.Dedup]] and
+  * [[graft.text]] compute a SimHash as 64 conditional sums, HLL
+  * registers over a distinct-token stream, and so on — correct, but
+  * many aggregation buffers (or a distinct shuffle) per group. These
+  * one-pass aggregators keep a single primitive array buffer per group:
+  * less shuffle payload, one pass, same result (bit-for-bit — asserted
+  * in tests against the composed forms).
   *
-  * Hashes reuse Spark's own Murmur3_x86_32 over UTF8 bytes so
-  * `minhash_agg(shingle, k)` equals `min(hash(shingle, seed))` per seed.
+  * MinHash is not here: a document's signature needs only its own text,
+  * so it is a per-row expression ([[MinHashSig]]) and no aggregate —
+  * no shuffle on `doc_id` at all.
   */
 object Sketches {
-
-  /** Identical to Spark's `hash(col, lit(seed))` on a string column:
-    * `hash(...)` folds murmur3 over its children starting at seed 42 —
-    * bytes of the string first, then the literal seed int. */
-  private[graft] def murmur3(s: String, seed: Int): Int = {
-    val u = UTF8String.fromString(s)
-    val h = Murmur3_x86_32.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42)
-    Murmur3_x86_32.hashInt(seed, h)
-  }
-
-  /** One-pass k-permutation MinHash over a group of shingle strings.
-    *
-    * The seed-42 byte hash is hoisted out of the k-seed loop: in
-    * `hash(shingle, seed)` only the final `hashInt(seed, ·)` mix
-    * depends on the seed, so the UTF8 encode + full byte pass happen
-    * ONCE per shingle instead of k times (bit-identical to the
-    * per-seed form — the composed-form equality test pins it). At
-    * k = 32 this removes ~97% of the band stage's byte hashing. */
-  class MinHashAgg(numHashes: Int) extends Aggregator[String, Array[Int], Seq[Int]] {
-    def zero: Array[Int] = Array.fill(numHashes)(Int.MaxValue)
-    def reduce(buf: Array[Int], shingle: String): Array[Int] = {
-      val u = UTF8String.fromString(shingle)
-      val hBytes = Murmur3_x86_32.hashUnsafeBytes(
-        u.getBaseObject, u.getBaseOffset, u.numBytes(), 42)
-      var i = 0
-      while (i < numHashes) {
-        val h = Murmur3_x86_32.hashInt(i, hBytes)
-        if (h < buf(i)) buf(i) = h
-        i += 1
-      }
-      buf
-    }
-    def merge(a: Array[Int], b: Array[Int]): Array[Int] = {
-      var i = 0
-      while (i < numHashes) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-      a
-    }
-    def finish(buf: Array[Int]): Seq[Int] = buf.toSeq
-    def bufferEncoder: Encoder[Array[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
-    def outputEncoder: Encoder[Seq[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Int]]()
-  }
-
-  /** Column form: `minhash_agg(shingleCol)` → array<int> signature. */
-  def minhashAgg(shingle: Column, numHashes: Int): Column =
-    udaf(new MinHashAgg(numHashes)).apply(shingle)
 
   /** One-pass 64-bit SimHash over a group of token strings: per-bit
     * +1/-1 vote by the token's xxhash64 bits, sign-packed at finish. */

@@ -53,6 +53,9 @@ class GraftSessionSpec extends AnyFunSuite {
       org.apache.spark.sql.SparkSession.builder()
         .master("local[1]").appName("conf-seam-spec"),
       Some("spark.graft.test.seam=a=b")).getOrCreate()
-    assert(s2.conf.get("spark.graft.test.seam") == "a=b")
+    // getOrCreate hands back the shared test session: unset the key so
+    // it does not leak into later suites
+    try assert(s2.conf.get("spark.graft.test.seam") == "a=b")
+    finally s2.conf.unset("spark.graft.test.seam")
   }
 }

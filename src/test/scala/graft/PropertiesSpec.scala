@@ -17,13 +17,35 @@ class PropertiesSpec extends AnyFunSuite {
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
 
-  test("one-pass MinHash aggregator == composed min(hash) signatures") {
-    val docs = Tables.documents(spark, sf).limit(100)
-    val a = Dedup.minhashSignatures(docs, 3, 16).collect()
+  test("native minhash_sig == composed min(hash) signatures (edge texts, n = 1..3)") {
+    import graft.functions.MinHashSig.minhashSig
+    def sigs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
-    val b = Dedup.minhashSignaturesOnePass(docs, 3, 16).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
-    assert(a == b, "aggregator must replicate composed signatures bit-for-bit")
+    def native(df: org.apache.spark.sql.DataFrame, n: Int, k: Int) = sigs(
+      df.select(col("doc_id"), minhashSig(col("text"), n, k).as("signature"))
+        .filter(size(col("signature")) > 0))
+    val edge = Seq(
+      "alpha beta gamma delta", "double  space  between", " leading space",
+      "trailing space ", "  both  ", "", " ", "   ", "\t", "tab\tinside a\ttoken",
+      "Grüße aus München, schöne Straße", "北京 上海 广州 深圳 北京 上海",
+      "a b a b a b a b", "x", "x y", "same same same same").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }
+    val docs = (edge :+ (edge.length.toLong, null: String)).toDF("doc_id", "text")
+    for (n <- 1 to 3) {
+      val want = sigs(Dedup.minhashSignatures(docs, n, 16))
+      assert(native(docs, n, 16) == want, s"n = $n")
+    }
+    val sample = Tables.documents(spark, sf).limit(100)
+    assert(native(sample, 3, 16) == sigs(Dedup.minhashSignatures(sample, 3, 16)),
+      "kernel must replicate composed signatures bit-for-bit")
+  }
+
+  test("bandRows: a document with fewer than n tokens gets no band rows") {
+    val docs = Seq((1L, "one two"), (2L, "one two three"), (3L, null: String))
+      .toDF("doc_id", "text")
+    val rows = Dedup.bandRows(docs, 3, 8, 4).select("doc_id", "band").collect()
+    assert(rows.map(_.getLong(0)).distinct.toSeq == Seq(2L))
+    assert(rows.map(_.getInt(1)).sorted.toSeq == (0 until 8))
   }
 
   test("one-pass SimHash aggregator == composed 64-sum simhash") {

@@ -15,6 +15,10 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     * harnesses clean their trees in `finally`; the specs must too. */
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
+  /** Jobs one steady [[graft.stream.CorpusStream.admissionSink]]
+    * micro-batch runs, as measured; a new driver action fails the spec. */
+  private val AdmissionJobsPerBatch = 13
+
   private def tempDir(prefix: String): String = synchronized {
     val d = java.nio.file.Files.createTempDirectory(prefix).toString
     tempDirs += d
@@ -467,6 +471,49 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val idxDocs = spark.read.parquet(idx).select("doc_id").distinct()
       .as[Long].collect().sorted
     assert(idxDocs.toSeq == got.toSeq)
+  }
+
+  test("admissionSink: a steady micro-batch runs at most " +
+      s"$AdmissionJobsPerBatch Spark jobs") {
+    import graft.stream.CorpusStream
+    val dir = tempDir("graft_adm_jobs")
+    implicit val sctx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = CorpusStream.admissionSink(mem.toDF().toDF("doc_id", "text"),
+      s"$dir/idx", s"$dir/corpus", s"$dir/ckpt", 3, 8, 4, 0.5)
+    // micro-batches run under the query's run id as job group, and tag
+    // their jobs with the batch id
+    val group = q.runId.toString
+    val jobs = scala.collection.concurrent.TrieMap.empty[Long, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.synchronized(
+            jobs.update(b.toLong, jobs.getOrElse(b.toLong, 0) + 1)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rnd = new scala.util.Random(11L)
+    val words = (0 until 400).map(i => s"w$i")
+    def text() = Seq.fill(12)(words(rnd.nextInt(words.length))).mkString(" ")
+    var prev = Seq.empty[(Long, String)]
+    try (0 until 5).foreach { b =>
+      // 40 fresh documents, plus near copies of two of the last batch's
+      val fresh = (0 until 40).map(i => ((b * 100 + i).toLong, text()))
+      val near = prev.take(2).map { case (id, t) => (id + 50L, t + " extra") }
+      mem.addData(fresh ++ near: _*)
+      q.processAllAvailable()
+      prev = fresh
+    } finally {
+      q.stop()
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert((0L until 5L).forall(jobs.contains), s"every batch must run jobs: $jobs")
+    val steady = (2L until 5L).map(b => b -> jobs(b))
+    info(s"jobs per micro-batch: ${(0L until 5L).map(jobs)}")
+    assert(steady.forall(_._2 <= AdmissionJobsPerBatch),
+      s"a driver action crept into the admission micro-batch: $steady")
   }
 
   test("ccMaintenanceSink: maintained group ids equal batch CC, relabel on " +
