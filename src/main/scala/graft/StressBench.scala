@@ -1228,8 +1228,7 @@ object StressBench {
           org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(bands)
         }
       }
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
+      val fs = CorpusStream.fsFor(spark, new org.apache.hadoop.fs.Path(dir))
       // the unit measures the TRICKLE regime: if ANY batch drifts past
       // the residue threshold (doc_ids assign by mod nBatches, so a
       // skewed residue class — not just batch 0 — can exceed the class

@@ -111,10 +111,6 @@ object DurationPipeline {
        |R2: ${metrics("r2")}
        |""".stripMargin
 
-  def writeReport(path: String, sections: Seq[String]): Unit =
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      sections.mkString("\n"))
-
   /** A duration-regression-shaped feature table from the `events`
     * testdata (label = value; features = type ordinal, calendar, payload
     * key) — SQL-expressible, so oracle-checkable. */

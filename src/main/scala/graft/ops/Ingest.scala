@@ -20,12 +20,6 @@ object Ingest {
       .select(explode(col("events")).as("event"))
       .select(col("event.*"))
 
-  /** Inferred scan (dev convenience; schema drifts with the data). */
-  def readEventsInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", true).json(path)
-      .select(explode(col("events")).as("event"))
-      .select(col("event.*"))
-
   /** Default fixture location (checked-in mini corpus, FIXTURES.md §1). */
   def fixturePath: String = {
     val local = new java.io.File("data/mini_incidents.json")

@@ -20,10 +20,6 @@ object Catalog {
   def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(path)
 
-  /** S4: glob scan — one logical table over many file prefixes. */
-  def readGlob(spark: SparkSession, glob: String): DataFrame =
-    spark.read.parquet(glob)
-
   /** S4 (explicit form): schema-evolution-safe union of sources. */
   def unionAll(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))

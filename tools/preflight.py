@@ -14,6 +14,12 @@ reports zero DECIMAL/FLOAT32 columns. Dual-SF is the default because a
 different fixture slice exercises different numeric corners (the q138
 rounding-boundary catch).
 
+It also lists the `graft_*` entries of the temp dir before and after each
+Verify run: the graded replay harness (`CorpusStream.replayGraded`) is
+the only program code that makes such a temp tree and deletes it in a
+`finally`, so a clean Verify leaves none. Any new entry is printed in
+the summary and fails the pre-flight.
+
 Serializes everything through one sbt at a time — never run it while
 another sbt task is active (shared target/ dir).
 """
@@ -27,6 +33,16 @@ def sh(cmd, env=None):
     r = subprocess.run(cmd, capture_output=True, text=True, env=e,
                        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     return r.returncode, r.stdout + r.stderr
+
+
+# The forked Verify JVM's java.io.tmpdir: build.sbt sets none, so it is
+# the JDK default on Linux. Python's tempfile.gettempdir() would follow
+# TMPDIR, which the JVM ignores.
+JVM_TMPDIR = "/tmp"
+
+
+def graft_temp_entries():
+    return {e for e in os.listdir(JVM_TMPDIR) if e.startswith("graft_")}
 
 
 def main():
@@ -48,14 +64,21 @@ def main():
     budget = float(opt("--budget-s", "120"))
     tools = os.path.dirname(os.path.abspath(__file__))
 
-    results, ok = [], True
+    results, ok, leaked = [], True, []
     for sf in sfs:
         sfdir = os.path.join(testdata, sf)
         out = tempfile.mkdtemp(prefix=f"preflight_{sf}_")
         try:
+            before = graft_temp_entries()
             code, log = sh(["sbt", "-batch",
                             f"runMain graft.Verify {sfdir} {out}"],
                            env={"SPARK_GRAFT_CPUS": cpus})
+            new = sorted(graft_temp_entries() - before)
+            if new:
+                print(f"{sf}: Verify left {len(new)} graft_* temp "
+                      f"entries: {new}  <-- PRE-FLIGHT FAILED")
+                leaked += [f"{sf}:{e}" for e in new]
+                ok = False
             if code != 0:
                 print(f"{sf}: Verify FAILED\n{log[-2000:]}")
                 ok = False
@@ -99,13 +122,17 @@ def main():
         finally:
             shutil.rmtree(out, ignore_errors=True)
 
+    if leaked:
+        print(f"\ntemp-dir leak: Verify left {len(leaked)} graft_* "
+              f"entries in {JVM_TMPDIR}: {', '.join(leaked)}")
     if results and ok:
         parts = " / ".join(f"{r[3]:.1f} s at {r[0]}" for r in results)
         print(f"\nARCHITECTURE.md paragraph:\n"
               f"pre-flight at final HEAD: {results[0][1]}/{results[0][1]} "
               f"pass at {'BOTH SFs' if len(results) == 2 else 'all SFs'} — "
               f"{parts} DuckDB total (budget {budget:.0f} s); output-type "
-              f"audit 0 DECIMAL / 0 FLOAT32.")
+              f"audit 0 DECIMAL / 0 FLOAT32; Verify left no graft_* temp "
+              f"entries.")
     sys.exit(0 if ok and results else 1)
 
 
