@@ -348,7 +348,15 @@ object PlanDump {
       "by source — the corpus enters one (source, score)-keyed hash agg " +
       "(after the id-key join pruned to (doc_id, source)); the sweep " +
       "cumulatives, totals, and row_number argmax all run on the bounded " +
-      "per-source threshold table, no coalesce(1), nothing pairwise")
+      "per-source threshold table, no coalesce(1), nothing pairwise"),
+    "q63_dbscan" -> ("the grid kernel (two shuffles of 9 probe rows per point, " +
+      "degree and union-find per cell) and CC over its spanning forest run at " +
+      "construction; the rendered plan is the label tail: the checkpointed " +
+      "link rows (Scan ExistingRDD) meet the contracted components, one hash " +
+      "agg per point takes the min, and the points join it on id — no " +
+      "neighbour-pair rows anywhere"),
+    "q68_dbscan_severity" -> ("the q63 kernel over 3 dims (27 probe rows per " +
+      "point): the same label tail, joined back to the projected points")
   )
 
   /** `explain("formatted")` with the run-dependent tokens normalized —

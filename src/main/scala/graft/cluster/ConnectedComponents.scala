@@ -53,10 +53,13 @@ object ConnectedComponents {
   def contract(edges: DataFrame, maxIter: Int = 64,
                driverEdgeBound: Long = DriverEdgeBound): DataFrame = {
     val spark = edges.sparkSession
+    // Lazy: the first fingerprint materializes the checkpoint as it scans,
+    // so a bounded input that goes straight to the driver finish is
+    // computed once and costs no checkpoint job of its own.
     var e = edges.toDF("u", "v")
       .filter(col("u") =!= col("v"))
       .select(col("u").cast("long"), col("v").cast("long"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     var fp = fingerprint(e)
     var converged = false
     var it = 0

@@ -22,11 +22,15 @@ object DurationPipeline {
 
   /** Feature pipeline over a table with categorical columns `catCols`
     * and numeric columns `numCols`, label `labelCol`
-    * (StringIndexer(keep) ×n → VectorAssembler → StandardScaler —
-    * `ml-sparkml.py:33-44`). */
+    * (StringIndexer(keep) → VectorAssembler → StandardScaler —
+    * `ml-sparkml.py:33-44`). One multi-column indexer stands in for the
+    * reference's indexer per column: Spark fits both forms through the
+    * same frequency-then-label ordering, so the `_index` columns are
+    * identical (MLSpec), at one fit job and one saved stage. */
   def featureStages(catCols: Seq[String], numCols: Seq[String]): Array[org.apache.spark.ml.PipelineStage] = {
-    val indexers = catCols.map(c =>
-      new StringIndexer().setInputCol(c).setOutputCol(s"${c}_index").setHandleInvalid("keep"))
+    val indexers = if (catCols.isEmpty) Nil else Seq(new StringIndexer()
+      .setInputCols(catCols.toArray).setOutputCols(catCols.map(_ + "_index").toArray)
+      .setHandleInvalid("keep"))
     val assembler = new VectorAssembler()
       .setInputCols((catCols.map(_ + "_index") ++ numCols).toArray)
       .setOutputCol("features").setHandleInvalid("skip")
@@ -83,13 +87,13 @@ object DurationPipeline {
       ReferenceGrid.numTrees, ReferenceGrid.maxDepth, ReferenceGrid.maxBins)
 
   /** rmse/mae/mse/r2 — the reference's metric quadruple
-    * (`ml-sparkml.py:66-78`). */
+    * (`ml-sparkml.py:66-78`), read from one metrics pass over the
+    * predictions; each equals its per-metric `evaluate` (MLSpec). */
   def evaluate(model: PipelineModel, test: DataFrame, labelCol: String): Map[String, Double] = {
-    val pred = model.transform(test)
-    Seq("rmse", "mae", "mse", "r2").map { mName =>
-      mName -> new RegressionEvaluator().setLabelCol(labelCol)
-        .setPredictionCol("prediction").setMetricName(mName).evaluate(pred)
-    }.toMap
+    val m = new RegressionEvaluator().setLabelCol(labelCol).setPredictionCol("prediction")
+      .getMetrics(model.transform(test))
+    Map("rmse" -> m.rootMeanSquaredError, "mae" -> m.meanAbsoluteError,
+      "mse" -> m.meanSquaredError, "r2" -> m.r2)
   }
 
   /** Persist / load roundtrip (`ml-savepipeline.py:83`,

@@ -9,7 +9,7 @@ import graft.sources.Layout
   * stats prune files for a predicate on the non-leading dimension —
   * where a single-column sort layout prunes nothing.
   */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   // 64x64 grid in a scrambled row order (so layout, not input order,
@@ -19,7 +19,7 @@ class LayoutSpec extends AnyFunSuite {
     .orderBy(md5(col("id").cast("string")))
 
   test("compact rewrites a fragmented table into fewer files, content intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact") + "/t"
     // simulate micro-batch appends: 12 tiny files
     for (b <- 0 until 12)
       spark.range(b * 100, (b + 1) * 100).toDF("id")
@@ -37,7 +37,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact recovers from a crash stranded between the two swap renames") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_cr").toString
+    val base = tempDir("graft_compact_cr")
     val dir = base + "/t"
     spark.range(0, 500).toDF("id").write.parquet(dir)
     val fsDir = new java.io.File(dir)
@@ -107,9 +107,9 @@ class LayoutSpec extends AnyFunSuite {
            min(col("y")).as("y0"), max(col("y")).as("y1"))
       .collect()
 
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val zDir = tempDir("graft_zorder")
     Layout.zorderWrite(grid, Seq("x", "y"), zDir, numFiles = 16)
-    val xDir = java.nio.file.Files.createTempDirectory("graft_xsort").toString
+    val xDir = tempDir("graft_xsort")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(xDir)
 

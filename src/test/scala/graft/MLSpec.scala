@@ -7,7 +7,7 @@ import graft.ops.Tables
 
 /** ML surface (SURVEY §2.8 U3-U5): pipeline fit, metrics, persist/load
   * roundtrip with identical predictions, duration-label parity. */
-class MLSpec extends AnyFunSuite {
+class MLSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   val cat = Seq("event_type"); val num = Seq("type_code", "h", "d", "k")
 
@@ -21,7 +21,7 @@ class MLSpec extends AnyFunSuite {
     assert(metrics("rmse") > 0 && !metrics("rmse").isNaN)
     assert(math.abs(metrics("mse") - metrics("rmse") * metrics("rmse")) < 1e-6)
 
-    val dir = java.nio.file.Files.createTempDirectory("rfmodel").toString
+    val dir = tempDir("rfmodel")
     DurationPipeline.save(model, s"$dir/m")
     val reloaded = DurationPipeline.load(s"$dir/m")
     val p1 = DurationPipeline.predict(model, test0, "event_id")
@@ -47,6 +47,39 @@ class MLSpec extends AnyFunSuite {
     }
     assert(metrics("rmse") > 0 && metrics("rmse") <= meanBaselineRmse * 1.5,
       s"GBT rmse ${metrics("rmse")} vs baseline $meanBaselineRmse")
+  }
+
+  test("multi-column StringIndexer == one indexer per column (Open511 fixture, eventFeatures)") {
+    import org.apache.spark.ml.feature.StringIndexer
+    val open511 = graft.ops.Clean.mlTable(
+      graft.ops.Ingest.readEvents(spark, graft.ops.Ingest.fixturePath))
+    Seq((open511, "id", Seq("event_type", "severity", "status")),
+        (feats, "event_id", Seq("event_type", "h"))).foreach { case (df, key, cols) =>
+      // fit on a part, so handleInvalid=keep also meets unseen labels
+      val fitOn = df.filter(xxhash64(col(key)) % 3 =!= 0)
+      val multi = DurationPipeline.featureStages(cols, Nil).head.asInstanceOf[StringIndexer]
+        .fit(fitOn).transform(df)
+      val perColumn = cols.foldLeft(df) { (d, c) =>
+        new StringIndexer().setInputCol(c).setOutputCol(s"${c}_index")
+          .setHandleInvalid("keep").fit(fitOn).transform(d)
+      }
+      val idx = col(key).cast("string") +: cols.map(c => col(s"${c}_index"))
+      val a = multi.select(idx: _*).collect().map(_.toSeq).toSet
+      val b = perColumn.select(idx: _*).collect().map(_.toSeq).toSet
+      assert(a.size == df.count() && a == b, s"indices differ on $cols")
+    }
+  }
+
+  test("evaluate: one metrics pass == each per-metric RegressionEvaluator") {
+    import org.apache.spark.ml.evaluation.RegressionEvaluator
+    val Array(train, test0) = feats.randomSplit(Array(0.8, 0.2), 42)
+    val model = DurationPipeline.rfPipeline(cat, num, "label", numTrees = 5).fit(train)
+    val metrics = DurationPipeline.evaluate(model, test0, "label")
+    val pred = model.transform(test0)
+    Seq("rmse", "mae", "mse", "r2").foreach { m =>
+      assert(metrics(m) == new RegressionEvaluator().setLabelCol("label")
+        .setPredictionCol("prediction").setMetricName(m).evaluate(pred), m)
+    }
   }
 
   test("duration label parity on the Open511 fixture (days)") {

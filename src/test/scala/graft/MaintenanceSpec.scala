@@ -7,7 +7,7 @@ import graft.sources.Catalog
 /** Table-maintenance operators: CDC changelog apply, idempotent
   * partition backfill, schema-evolution reads, quarantine ingest.
   */
-class MaintenanceSpec extends AnyFunSuite {
+class MaintenanceSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -35,7 +35,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("overwritePartitions touches only the partitions in the batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dynpart").toString + "/t"
+    val dir = tempDir("graft_dynpart") + "/t"
     val full = Seq((1, "d1", "x"), (2, "d1", "y"), (3, "d2", "z"))
       .toDF("id", "day", "v")
     Catalog.writePartitioned(full, dir, Seq("day"))
@@ -53,7 +53,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("readEvolved merges schemas across generations; old files null-fill") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString + "/t"
+    val dir = tempDir("graft_evolve") + "/t"
     Seq((1L, "a")).toDF("id", "v").write.mode("append").parquet(dir)
     Seq((2L, "b", 0.5)).toDF("id", "v", "score").write.mode("append").parquet(dir)
     val out = Catalog.readEvolved(spark, dir)
@@ -64,7 +64,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("quarantine ingest routes malformed lines without losing them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_quar").toString
+    val dir = tempDir("graft_quar")
     val f = new java.io.PrintWriter(s"$dir/in.jsonl")
     f.println("""{"id": 1, "v": "ok"}""")
     f.println("""{"id": BROKEN""")
@@ -80,7 +80,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("csv quarantine ingest: header, schema, malformed rows replayable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csvq").toString
+    val dir = tempDir("graft_csvq")
     val f = new java.io.PrintWriter(s"$dir/in.csv")
     f.println("id,v,score")
     f.println("1,ok,0.5")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * These fail if a refactor silently loses predicate pushdown, column
   * pruning, broadcast joins, or partial aggregation.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private def planOf(q: String): String =
@@ -222,7 +222,7 @@ class PlanSpec extends AnyFunSuite {
     // modes reach the scan.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp_events").toString
+    val dir = tempDir("graft_dpp_events")
     val ev = graft.ops.Tables.events(spark, sf)
       .withColumn("m", month(col("event_ts")))
     graft.sources.Catalog.writePartitioned(ev, dir, Seq("m"))
@@ -632,7 +632,7 @@ class PlanSpec extends AnyFunSuite {
       BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-    val dir = java.nio.file.Files.createTempDirectory("ccprobe_gate").toString
+    val dir = tempDir("ccprobe_gate")
     graft.stream.CorpusStream.writeBatchIndex(
       Seq((1L, 0, 11L, 1L), (2L, 1, 22L, 2L), (3L, 0, 11L, 1L))
         .toDF("doc_id", "band", "bucket", "g0"),
@@ -696,7 +696,6 @@ class PlanSpec extends AnyFunSuite {
     // shares (band 0, bucket 11) with prior docs {1, 3} whose rep is
     // doc 1 labeled g0=1; doc 12's bucket is new — no edge
     assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((10L, 1L)))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("probe auc family: literal-fold scoring + distinct-score agg, no rank sort") {

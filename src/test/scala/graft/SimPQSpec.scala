@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sim.{PQ, Similarity}
 
 /** IVF-PQ: encoding invariants + recall against exact brute force. */
-class SimPQSpec extends AnyFunSuite {
+class SimPQSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private lazy val emb = graft.ops.Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -30,7 +30,7 @@ class SimPQSpec extends AnyFunSuite {
 
   test("persisted PQ index serves partition-pruned probes with identical results") {
     val idx = PQ.pqBuild(emb, nlist = 8, m = 4, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq")
     PQ.pqWriteIndex(idx, emb, dir)
     val q = emb.filter(col("vec_id") < 6)
 

@@ -7,7 +7,7 @@ import graft.sources.Catalog
 import graft.multimodal.Multimodal
 import graft.ops.Tables
 
-class SourcesMultimodalSpec extends AnyFunSuite {
+class SourcesMultimodalSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("S2 schema-on-read projects declared columns only") {
@@ -25,7 +25,7 @@ class SourcesMultimodalSpec extends AnyFunSuite {
   }
 
   test("S4 glob scan + partitioned write→dynamic pruning roundtrip") {
-    val dir = java.nio.file.Files.createTempDirectory("part_out").toString
+    val dir = tempDir("part_out")
     val ev = Tables.events(spark, sf)
       .withColumn("d", dayofmonth(col("event_ts")))
     Catalog.writePartitioned(ev, s"$dir/events", Seq("d"))
@@ -37,7 +37,7 @@ class SourcesMultimodalSpec extends AnyFunSuite {
   }
 
   test("dimension filter dynamically prunes fact partitions (DPP)") {
-    val dir = java.nio.file.Files.createTempDirectory("dpp_out").toString
+    val dir = tempDir("dpp_out")
     val ev = Tables.events(spark, sf)
       .withColumn("d", dayofmonth(col("event_ts")))
     Catalog.writePartitioned(ev, s"$dir/events", Seq("d"))
@@ -91,7 +91,7 @@ class SourcesMultimodalSpec extends AnyFunSuite {
   }
 
   test("jsonl roundtrip preserves rows and schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/docs"
+    val dir = tempDir("graft_jsonl") + "/docs"
     val docs = Tables.documents(spark, sf).select("doc_id", "text", "lang")
     Catalog.writeJsonl(docs, dir)
     val back = Catalog.readJsonl(spark, dir, docs.schema)

@@ -7,29 +7,13 @@ import graft.stream.EventStream
 
 /** Structured-Streaming ETL (SURVEY §2.9): MemoryStream-driven T2 chain,
   * watermarked dedup, empty-batch-skipping parquet sink. */
-class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
-
-  /** Temp dirs registered here are removed in afterAll — the graded
-    * harnesses clean their trees in `finally`; the specs must too. */
-  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
   /** Jobs one steady [[graft.stream.CorpusStream.admissionSink]]
     * micro-batch runs, as measured; a new driver action fails the spec. */
   private val AdmissionJobsPerBatch = 13
-
-  private def tempDir(prefix: String): String = synchronized {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    tempDirs += d
-    d
-  }
-
-  override def afterAll(): Unit = {
-    tempDirs.foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    super.afterAll()
-  }
 
   private def eventJson(id: String, created: String, severity: String = "MINOR"): String =
     s"""{"events":[{"id":"$id","headline":"INCIDENT","status":"ACTIVE",

@@ -9,7 +9,7 @@ import graft.sim.Similarity
 
 /** Text / dedup / similarity: exactness invariants + recall of the
   * approximate (LSH) paths against their exact baselines. */
-class TextDedupSimSpec extends AnyFunSuite {
+class TextDedupSimSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   lazy val docs = Tables.documents(spark, sf).cache()
   lazy val emb = Tables.embeddings(spark, sf).cache()
@@ -162,7 +162,7 @@ class TextDedupSimSpec extends AnyFunSuite {
 
   test("persisted IVF index serves partition-pruned probes with identical results") {
     val idx = Similarity.ivfBuild(emb, nlist = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf")
     Similarity.ivfWriteIndex(idx, dir)
     val q = emb.filter(col("vec_id") < 10)
 
@@ -522,7 +522,7 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(all == Seq(10L, 11L, 12L))
 
     // persisted band index: identical decisions, and appends maintain it
-    val dir = java.nio.file.Files.createTempDirectory("graft_bands").toString + "/idx"
+    val dir = tempDir("graft_bands") + "/idx"
     Dedup.writeBandIndex(corpus, dir)
     val indexed = Dedup.incrementalNearDupIndexed(spark, dir, batch, minEstJaccard = 0.4)
       .as[Long].collect().toSeq
@@ -638,7 +638,7 @@ class TextDedupSimSpec extends AnyFunSuite {
   }
 
   test("persisted postings index: probe == direct computation, partition-pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("postidx").toString
+    val dir = tempDir("postidx")
     val existing = docs.filter(col("doc_id") % 2 === 0)
     val incoming = docs.filter(col("doc_id") % 2 === 1)
     Dedup.writePostingsIndex(existing, dir, 3, 64)
