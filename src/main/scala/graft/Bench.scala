@@ -177,27 +177,20 @@ object Bench {
     val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"warmup":"${esc(warmupStatus)}","queries":$qs,"errors":$errJson,"failed":${errors.size},"sf":"$sfDir"}"""
     // The driver tails the run's combined output and that window truncates
     // the FRONT of a long final line (round 4 lost the "metric" head of a
-    // ~2.6 KB per-query line → parsed:null). So: the full per-query JSON
-    // goes to the file mirror and an EARLIER stdout line, and the LAST line
-    // of both streams is a compact summary (<200 bytes) that always fits.
+    // ~2.6 KB per-query line → parsed:null). So the full per-query JSON
+    // goes to the file, and stdout gets the per-query map in
+    // self-contained chunks, then a compact summary (<200 bytes) as the
+    // LAST line the program prints.
     val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"warmup":"${esc(warmupStatus)}","failed":${errors.size},"sf":"$sfDir"}"""
-    // Two file mirrors (ADVICE r5): the full per-query map, and the
-    // compact summary alone — a driver that can't recover the JSON from
-    // an sbt-wrapped tail (every round so far: parsed:null) can read
-    // either file directly.
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/graft_bench.json"),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/graft_bench_summary.json"),
-        (summary + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] file mirror failed: ${e.getMessage}")
     }
-    // Chunked per-query lines (VERDICT r18 item 1): the driver's window
-    // has never recovered the ~3-5 KB single-line per-query map in one
-    // piece (parsed:null every round r14-r18), so ALSO emit the map as
-    // SELF-CONTAINED one-line JSON chunks, each well under 1.5 KB, in
-    // canonical key order, immediately before the final summary line:
+    // Chunked per-query lines (VERDICT r18 item 1): each chunk is a
+    // self-contained one-line JSON well under 1.5 KB, in canonical key
+    // order:
     //   {"metric":"per_query_part","part":i,"of":n,"queries":{...}}
     // A consumer reassembles by concatenating the "queries" maps of
     // parts 1..n (keys are disjoint); any single part also stands alone.
@@ -214,19 +207,15 @@ object Bench {
       partBody += entry; partLen += entry.length + 1
     }
     flushPart()
-    val nParts = partsOut.size
-    val partLines = partsOut.zipWithIndex.map { case (body, i) =>
-      s"""{"metric":"per_query_part","part":${i + 1},"of":$nParts,"queries":$body}"""
-    }
+    // stop Spark first: nothing it logs on the way down may follow the
+    // summary
+    spark.stop()
     System.err.flush()
-    println(full)
-    partLines.foreach(println)
+    partsOut.zipWithIndex.foreach { case (body, i) =>
+      println(s"""{"metric":"per_query_part","part":${i + 1},"of":${partsOut.size},"queries":$body}""")
+    }
     println(summary)
     System.out.flush()
-    partLines.foreach(System.err.println)
-    System.err.println(summary)
-    System.err.flush()
-    if (errors.nonEmpty) { spark.stop(); sys.exit(1) }
-    spark.stop()
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -277,7 +277,7 @@ object SparkEntry {
       graft.stream.CorpusStream.maintainedTrailingSummary(Tables.events(s, d), 4)),
     // the streaming near-dup ADMISSION loop graded end to end — the
     // REAL checkpointed admissionSink (partitioned band index,
-    // strictly-earlier-batch probes, high-water-gated appends) replayed
+    // strictly-earlier-batch probes, per-batch corpus overwrites) replayed
     // over 4 deterministic micro-batches; the admitted corpus equals
     // the sequential-batch admission chain, which the oracle replays
     // round by round with q87's murmur3/minhash decision CTEs

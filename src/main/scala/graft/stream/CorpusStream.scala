@@ -389,7 +389,7 @@ object CorpusStream {
   /** GRADED end-to-end run of [[admissionSink]] through
     * [[replayGraded]], applied to the near-dup ADMISSION loop: the REAL
     * checkpointed sink — band-index partitions, replay-stable
-    * strictly-earlier-batch probes, high-water-gated corpus appends,
+    * strictly-earlier-batch probes, per-batch corpus partitions,
     * all of it — and the graded output is the ADMITTED CORPUS itself,
     * (doc_id, batch). Because each micro-batch's decisions probe
     * exactly the admitted docs of earlier batches, the streamed corpus
@@ -400,9 +400,9 @@ object CorpusStream {
   def maintainedAdmissionCorpus(documents: DataFrame, nBatches: Int): DataFrame =
     replayGraded(documents.select(col("doc_id"), col("text")), nBatches, "adm") { r =>
       r.run(admissionSink(r.stream, r("idx"), r("corpus"), r("ckpt")))
-      // Graded `batch` is the RESIDUE CLASS, not the sink's _batch_id:
+      // Graded `batch` is the RESIDUE CLASS, not the sink's batch id:
       // an empty residue class emits no streaming micro-batch, which
-      // compresses _batch_id and would shift every later label away
+      // compresses batch ids and would shift every later label away
       // from the oracle's doc_id % nBatches — while leaving admission
       // decisions unchanged. The residue class is the replay schedule
       // both engines agree on unconditionally.
@@ -525,6 +525,24 @@ object CorpusStream {
   private[graft] def fsFor(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Recovery half of the staged swap (the Layout.compact discipline)
+    * shared by the maintained state, the CC alias table and the
+    * compacted band-index base: a death between `delete(cur)` and the
+    * rename leaves the new copy stranded at `next`, so move it into
+    * place. RENAME-ONLY: a `next` next to a live `cur` is left alone,
+    * because whether it is a stale half-write each caller decides. */
+  private def recoverStaged(fs: FileSystem, next: Path, cur: Path): Unit =
+    if (!fs.exists(cur) && fs.exists(next))
+      require(fs.rename(next, cur), s"recovery rename failed: $next -> $cur")
+
+  /** Publish half of the staged swap: `next` is fully written, so
+    * delete `cur` and rename `next` onto it. A crash between the two
+    * leaves only `next`, which [[recoverStaged]] repairs. */
+  private def publishStaged(fs: FileSystem, next: Path, cur: Path): Unit = {
+    if (fs.exists(cur)) fs.delete(cur, true)
+    require(fs.rename(next, cur), s"rename failed: $next -> $cur")
+  }
+
   /** The high-water sidecar the state skeleton writes INSIDE the
     * staged `.next` directory before the swap (underscore-prefixed, so
     * parquet scans ignore it). Because it travels in the SAME atomic
@@ -562,73 +580,6 @@ object CorpusStream {
           .findFirstMatchIn(txt).map(_.group(1).toLong)
         for (s <- sid; b <- bid) yield (s, b)
       }
-    } catch { case _: java.io.IOException => None }
-
-  /** High-water gate for the APPEND-mode corpus table, from parquet
-    * footer statistics: the max `_batch_id` over row groups whose
-    * `_stream_id` equals `streamId` (Some(None) when no row group
-    * matches). Exact because every appended file is written by ONE
-    * (stream, batch) — both marker columns are literals — so each row
-    * group's min==max stats identify its pair; and crash-consistent
-    * for the same reason the scan gate was: it reads the COMMITTED
-    * data files themselves, not a separately-written marker that could
-    * disagree with them. Returns None (caller falls back to the
-    * original scan gate) when any data file lacks the marker columns
-    * or usable stats, or a stat is not constant within a row group —
-    * none of which this sink produces, but the gate must never become
-    * weaker than the scan it replaces. */
-  private[graft] def appendedHighWater(spark: SparkSession,
-                                       tablePath: String, streamId: String)
-      : Option[Option[Long]] =
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val root = new Path(tablePath)
-      val files = fsFor(spark, root).listStatus(root)
-        .filter(_.isFile).map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }
-      var hw = Option.empty[Long]
-      files.foreach { p =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try {
-          val blocks = rd.getFooter.getBlocks
-          var bi = 0
-          while (bi < blocks.size()) {
-            val cols = blocks.get(bi).getColumns
-            var sid: String = null
-            var bid = Option.empty[Long]
-            var ci = 0
-            while (ci < cols.size()) {
-              val cc = cols.get(ci)
-              val name = cc.getPath.toDotString
-              if (name == "_stream_id" || name == "_batch_id") {
-                val st = cc.getStatistics
-                if (st == null || st.isEmpty || !st.hasNonNullValue ||
-                    st.getNumNulls != 0 ||
-                    st.genericGetMin != st.genericGetMax)
-                  return None // not the constant-marker shape: fall back
-                if (name == "_stream_id") st.genericGetMin match {
-                  case b: org.apache.parquet.io.api.Binary =>
-                    sid = b.toStringUsingUTF8
-                  case _ => return None
-                } else st.genericGetMin match {
-                  case l: java.lang.Long => bid = Some(l.longValue())
-                  case _ => return None
-                }
-              }
-              ci += 1
-            }
-            if (sid == null || bid.isEmpty) return None // markers missing
-            if (sid == streamId)
-              hw = Some(hw.fold(bid.get)(math.max(_, bid.get)))
-            bi += 1
-          }
-        } finally rd.close()
-      }
-      Some(hw)
     } catch { case _: java.io.IOException => None }
 
   /** (source, token) rows of a documents batch, split on single
@@ -676,11 +627,8 @@ object CorpusStream {
         // fresh-checkpoint run (always present inside foreachBatch,
         // resolved once per sink start by the memo)
         val streamId = streamIdMemo.get(spark)
-        // crash recovery (the Layout.compact discipline): death between
-        // delete(cur) and rename leaves the new state stranded at .next
-        if (!fs.exists(cur) && fs.exists(nxt))
-          require(fs.rename(nxt, cur), s"$sinkName: recovery rename failed for $statePath")
-        else if (fs.exists(nxt)) fs.delete(nxt, true) // stale half-write
+        recoverStaged(fs, nxt, cur)
+        if (fs.exists(nxt)) fs.delete(nxt, true) // stale half-write
         val curExists = fs.exists(cur)
         val alreadyMerged = curExists && (readStateMeta(fs, cur) match {
           case Some((sid, bid)) => sid == streamId && bid >= batchId
@@ -702,8 +650,7 @@ object CorpusStream {
             .withColumn("_stream_id", lit(streamId))
             .write.mode("overwrite").parquet(nxt.toString)
           writeStateMeta(fs, nxt, streamId, batchId) // inside .next: swaps atomically
-          if (fs.exists(cur)) fs.delete(cur, true)
-          require(fs.rename(nxt, cur), s"$sinkName: rename failed for $statePath")
+          publishStaged(fs, nxt, cur)
         }
       }
       .start()
@@ -968,7 +915,7 @@ object CorpusStream {
     * would silently miss the folded history and reach DIFFERENT
     * admission/merge decisions. Called at the head of
     * [[compactBandIndex]] AND before every sink probe
-    * ([[ccProcessBatch]], [[admissionSink]]), so the window closes at
+    * ([[probePriorIndex]]), so the window closes at
     * the next batch even if no compaction is ever re-invoked.
     *
     * RENAME-ONLY by design: a `.compact_next` sitting next to a live
@@ -985,11 +932,7 @@ object CorpusStream {
   private[graft] def recoverCompactedBase(
       spark: SparkSession, indexPath: String): Unit = {
     val base = new Path(s"$indexPath/batch=-1")
-    val next = new Path(s"$indexPath/.compact_next")
-    val fs = fsFor(spark, base)
-    if (!fs.exists(base) && fs.exists(next))
-      require(fs.rename(next, base),
-        s"compactBandIndex: recovery rename failed for $indexPath")
+    recoverStaged(fsFor(spark, base), new Path(s"$indexPath/.compact_next"), base)
   }
 
   /** Default staleness bound for `.compact_lock`: a lock whose mtime
@@ -1198,9 +1141,7 @@ object CorpusStream {
         .filter(!coalesce(col("_dup"), lit(false)))
         .drop("_k", "_dup")
         .write.mode("overwrite").partitionBy("p").parquet(next.toString)
-      if (fs.exists(base)) fs.delete(base, true)
-      require(fs.rename(next, base),
-        s"compactBandIndex: rename failed for $indexPath")
+      publishStaged(fs, next, base)
       consumed.filter(_.getName != "batch=-1").foreach(p => fs.delete(p, true))
     } finally {
       heartbeat.interrupt(); heartbeat.join()
@@ -1280,109 +1221,27 @@ object CorpusStream {
       batchDirId(s.getPath.getName).exists(id => id >= 0L && id < batchId))
   }
 
-  /** Streaming near-dup ADMISSION loop — the full ingestion contract as
-    * one sink: each micro-batch probes the maintained band index (zero
-    * corpus-side compute, the [[graft.dedup.Dedup.incrementalNearDupIndexed]]
-    * serve path), admitted documents append to the corpus table, and
-    * their band rows extend the index for every later batch.
-    *
-    * Exactly-once WITHOUT a transaction log, by construction:
-    * - the index is laid out `indexPath/batch=<id>/p=<residue>/…`
-    *   (the [[IndexLayoutParts]] residue layout), and a batch's band
-    *   rows OVERWRITE their own batch partition — idempotent under
-    *   any number of replays;
-    * - admission decisions probe only `batch < batchId` partitions
-    *   (partition-pruned), so a replay whose own half-written bands are
-    *   already on disk cannot self-collide and reaches the SAME
-    *   decisions;
-    * - the corpus append is gated by the (_stream_id, _batch_id)
-    *   high-water marker, the [[aggMaintenanceSink]] discipline.
-    * Replay therefore converges whichever side the crash interrupted.
-    *
-    * In-batch near-dups are admitted together (only the corpus is
-    * probed) — run batch-level dedup upstream if the source can carry
-    * duplicates inside one micro-batch, exactly as in the batch
-    * admission path.
-    *
-    * `compactEvery > 0` self-compacts the band index whenever
-    * `compactEvery` strictly-earlier per-batch dirs have accumulated
-    * unfolded ([[pendingBatchDirs]] — a dir-count trigger, so empty
-    * micro-batches cannot defer the fold past the bound), under the
-    * same in-batch serialization argument as [[ccMaintenanceSink]]'s
-    * knob (the fold runs inside foreachBatch with bound `batchId` =
-    * committedHighWater + 1 on first attempt and replay alike); the
-    * admission probe tolerates the crash-mid-delete duplicate window
-    * by its DISTINCT rejected-ids contract. */
-  def admissionSink(docs: DataFrame, indexPath: String, corpusPath: String,
-                    checkpoint: String, n: Int = 3, bands: Int = 8,
-                    rowsPerBand: Int = 4, minEstJaccard: Double = 0.5,
-                    compactEvery: Int = 0,
-                    lockStaleMs: Long = CompactLockStaleMs)
-      : StreamingQuery = {
-    val streamIdMemo = new StreamIdMemo("admissionSink", checkpoint)
+  /** The streaming skeleton of both band-index sinks
+    * ([[admissionSink]], [[ccMaintenanceSink]]): `process(batch,
+    * batchId, streamId)` runs each NON-EMPTY micro-batch, `streamId`
+    * being the checkpoint's query id ([[StreamIdMemo]]), which owns the
+    * sink's own folds and lets its probe recognize a lock its crashed
+    * fold left. With `compactEvery > 0` the batch then folds the index
+    * whenever `compactEvery` strictly-earlier per-batch dirs have
+    * accumulated unfolded ([[pendingBatchDirs]] — a dir-count trigger,
+    * so empty micro-batches cannot defer the fold past the bound); see
+    * [[ccMaintenanceSink]] for why the in-batch fold is safe. */
+  private def bandIndexSink(docs: DataFrame, indexPath: String, checkpoint: String,
+                            sinkName: String, compactEvery: Int, lockStaleMs: Long)(
+      process: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    val streamIdMemo = new StreamIdMemo(sinkName, checkpoint)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val streamId = streamIdMemo.get(spark)
-          val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-          // the batch's band rows, computed ONCE for probe residues,
-          // admission decisions, and the index write alike
-          val batchBands = graft.dedup.Dedup.bandRows(b, n, bands, rowsPerBand)
-            .localCheckpoint()
-          val classes = residueClasses(batchBands)
-          val idxRoot = new Path(indexPath)
-          // replay-stable decisions: only STRICTLY EARLIER batches
-          // vote, residue-pruned to the buckets this batch can match
-          val admitted = if (fsFor(spark, idxRoot).exists(idxRoot)) {
-            // refuse to scan THROUGH an in-flight external fold; then
-            // a compaction that crashed between delete(base) and the
-            // swap must not hide the folded history from this probe
-            checkCompactLock(spark, indexPath, Some(streamId), lockStaleMs)
-            recoverCompactedBase(spark, indexPath)
-            // the batch side is the broadcast side of the joins below
-            // and of the index-row join: the index is scanned once and
-            // never shuffled, nor is the batch text. An empty prior read
-            // rejects nothing, so it needs no probe job
-            val prior = readPriorIndex(spark, indexPath, batchId, classes,
-              Some(AdmissionIndexSchema))
-            b.join(broadcast(graft.dedup.Dedup.admitAgainstPre(
-              prior, b, broadcast(batchBands), bands * rowsPerBand, minEstJaccard)),
-              Seq("doc_id"))
-          } else b
-          val adm = admitted.localCheckpoint()
-          // (1) idempotent index extension: overwrite THIS batch's partition
-          writeBatchIndex(
-            batchBands.join(broadcast(adm.select(col("doc_id"))), Seq("doc_id")),
-            s"$indexPath/batch=$batchId", classes.length)
-          // (2) marker-gated corpus append. The gate reads parquet
-          // FOOTER statistics (every appended file carries one constant
-          // (_stream_id, _batch_id) pair, so file-level min==max stats
-          // identify it exactly) instead of running a corpus-sized scan
-          // job per micro-batch; unusable stats fall back to the
-          // original scan, so the decision function is unchanged.
-          val corpus = new Path(corpusPath)
-          val alreadyAppended = fsFor(spark, corpus).exists(corpus) &&
-            (appendedHighWater(spark, corpusPath, streamId) match {
-              case Some(hw) => hw.exists(_ >= batchId)
-              case None => // stats unusable: the original full-scan gate
-                val c = spark.read.parquet(corpusPath)
-                c.columns.contains("_stream_id") &&
-                  (c.filter(col("_stream_id") === streamId)
-                    .agg(max(col("_batch_id"))).head() match {
-                      case r if r.isNullAt(0) => false
-                      case r => r.getLong(0) >= batchId
-                    })
-            })
-          if (!alreadyAppended)
-            adm.withColumn("_batch_id", lit(batchId))
-              .withColumn("_stream_id", lit(streamId))
-              .write.mode("append").parquet(corpusPath)
-          // eager-unpersist discipline: index written, corpus appended —
-          // free this batch's checkpoint blocks instead of waiting on GC
-          Seq(b, batchBands, adm)
-            .foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)
+          process(batch, batchId, streamId)
           if (compactEvery > 0 &&
               pendingBatchDirs(spark, indexPath, batchId) >= compactEvery)
             compactBandIndex(spark, indexPath, batchId, owner = streamId,
@@ -1391,6 +1250,95 @@ object CorpusStream {
       }
       .start()
   }
+
+  /** The probe preamble of both band-index sinks: None while no index
+    * exists (nothing earlier can match). Otherwise refuse to scan
+    * THROUGH an in-flight external fold ([[checkCompactLock]]), then
+    * recover a base that a fold crashed between delete(base) and the
+    * swap would hide ([[recoverCompactedBase]]), and return the
+    * replay-stable prior index: strictly earlier batches, pruned to
+    * this batch's residue `classes` ([[readPriorIndex]]). */
+  private def probePriorIndex(spark: SparkSession, indexPath: String, batchId: Long,
+                              classes: Seq[Long], selfOwner: Option[String],
+                              lockStaleMs: Long,
+                              schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] = {
+    val root = new Path(indexPath)
+    if (!fsFor(spark, root).exists(root)) None
+    else {
+      checkCompactLock(spark, indexPath, selfOwner, lockStaleMs)
+      recoverCompactedBase(spark, indexPath)
+      Some(readPriorIndex(spark, indexPath, batchId, classes, schema))
+    }
+  }
+
+  /** Streaming near-dup ADMISSION loop — the full ingestion contract as
+    * one sink: each micro-batch probes the maintained band index (zero
+    * corpus-side compute, the [[graft.dedup.Dedup.incrementalNearDupIndexed]]
+    * serve path), admitted documents land in the corpus table, and
+    * their band rows extend the index for every later batch.
+    *
+    * Exactly-once WITHOUT a transaction log or a replay gate, by
+    * construction — the [[ccMaintenanceSink]] protocol:
+    * - the index is laid out `indexPath/batch=<id>/p=<residue>/…`
+    *   (the [[IndexLayoutParts]] residue layout) and the corpus
+    *   `corpusPath/batch=<id>/…`, and a batch OVERWRITES its own
+    *   partition of each — idempotent under any number of replays;
+    * - admission decisions probe only `batch < batchId` partitions
+    *   (partition-pruned), so a replay whose own half-written bands are
+    *   already on disk cannot self-collide and reaches the SAME
+    *   decisions, hence rewrites the same rows.
+    * Replay therefore converges whichever write the crash interrupted,
+    * including a corpus write that left only some of its files.
+    * Readers see the partition column `batch` next to the documents'
+    * columns. As for the index, one stream owns one (index, corpus)
+    * pair: a fresh checkpoint restarts at batch 0 and overwrites the
+    * earlier stream's partitions.
+    *
+    * In-batch near-dups are admitted together (only the corpus is
+    * probed) — run batch-level dedup upstream if the source can carry
+    * duplicates inside one micro-batch, exactly as in the batch
+    * admission path.
+    *
+    * `compactEvery > 0` self-compacts the band index
+    * ([[bandIndexSink]]); the admission probe tolerates the
+    * crash-mid-delete duplicate window by its DISTINCT rejected-ids
+    * contract. */
+  def admissionSink(docs: DataFrame, indexPath: String, corpusPath: String,
+                    checkpoint: String, n: Int = 3, bands: Int = 8,
+                    rowsPerBand: Int = 4, minEstJaccard: Double = 0.5,
+                    compactEvery: Int = 0,
+                    lockStaleMs: Long = CompactLockStaleMs)
+      : StreamingQuery =
+    bandIndexSink(docs, indexPath, checkpoint, "admissionSink", compactEvery,
+        lockStaleMs) { (batch, batchId, streamId) =>
+      val spark = batch.sparkSession
+      val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+      // the batch's band rows, computed ONCE for probe residues,
+      // admission decisions, and the index write alike
+      val batchBands = graft.dedup.Dedup.bandRows(b, n, bands, rowsPerBand)
+        .localCheckpoint()
+      val classes = residueClasses(batchBands)
+      // the batch side is the broadcast side of the joins below and of
+      // the index-row join: the index is scanned once and never
+      // shuffled, nor is the batch text. An empty prior read rejects
+      // nothing, so it needs no probe job
+      val adm = probePriorIndex(spark, indexPath, batchId, classes, Some(streamId),
+          lockStaleMs, Some(AdmissionIndexSchema))
+        .fold(b)(prior => b.join(broadcast(graft.dedup.Dedup.admitAgainstPre(
+          prior, b, broadcast(batchBands), bands * rowsPerBand, minEstJaccard)),
+          Seq("doc_id")))
+        .localCheckpoint()
+      // idempotent writes: each overwrites THIS batch's own partition
+      writeBatchIndex(
+        batchBands.join(broadcast(adm.select(col("doc_id"))), Seq("doc_id")),
+        s"$indexPath/batch=$batchId", classes.length)
+      adm.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
+      // eager-unpersist discipline: index and corpus written — free
+      // this batch's checkpoint blocks instead of waiting on GC
+      Seq(b, batchBands, adm)
+        .foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)
+    }
 
   /** The maintained group state, resolved: `(doc_id, group_id)` for
     * every document [[ccMaintenanceSink]] has ingested. The state on
@@ -1411,13 +1359,8 @@ object CorpusStream {
 
   private def readAlias(spark: SparkSession, statePath: String): DataFrame = {
     val cur = new Path(s"$statePath/alias")
-    val nxt = new Path(s"$statePath/alias.next")
     val fs = fsFor(spark, cur)
-    // recovery (the maintainState discipline): death between delete(cur)
-    // and rename leaves the new alias stranded at .next
-    if (!fs.exists(cur) && fs.exists(nxt))
-      require(fs.rename(nxt, cur),
-        s"ccMaintenanceSink: recovery rename failed for $statePath/alias")
+    recoverStaged(fs, new Path(s"$statePath/alias.next"), cur)
     import spark.implicits._
     if (fs.exists(cur)) spark.read.parquet(cur.toString).select("dead", "live")
     else Seq.empty[(Long, Long)].toDF("dead", "live")
@@ -1567,17 +1510,10 @@ object CorpusStream {
     // the matched postings — batch-bucket-bounded — ever
     // shuffle; an unrestricted groupBy here would shuffle the
     // whole corpus-sized index every micro-batch
-    val idxRoot = new Path(indexPath)
     val repEdges = t("probe") {
-      if (fsFor(spark, idxRoot).exists(idxRoot)) {
-        // refuse to scan THROUGH an in-flight external fold; then a
-        // compaction that crashed between delete(base) and the swap
-        // must not silently hide the folded history from this probe
-        checkCompactLock(spark, indexPath, selfOwner, lockStaleMs)
-        recoverCompactedBase(spark, indexPath)
-        val priorIdx = readPriorIndex(spark, indexPath, batchId, classes)
-        ccProbeRepEdges(priorIdx, newBands, alias).localCheckpoint()
-      } else Seq.empty[(Long, Long)].toDF("u", "v")
+      probePriorIndex(spark, indexPath, batchId, classes, selfOwner, lockStaleMs)
+        .fold(Seq.empty[(Long, Long)].toDF("u", "v"))(
+          ccProbeRepEdges(_, newBands, alias).localCheckpoint())
     }
     val hubs = newBands.groupBy(col("band"), col("bucket"))
       .agg(min(col("doc_id")).as("hub"))
@@ -1635,9 +1571,7 @@ object CorpusStream {
         val fs = fsFor(spark, cur)
         if (fs.exists(nxt)) fs.delete(nxt, true) // stale half-write
         aliasNew.write.mode("overwrite").parquet(nxt.toString)
-        if (fs.exists(cur)) fs.delete(cur, true)
-        require(fs.rename(nxt, cur),
-          s"ccMaintenanceSink: rename failed for $statePath/alias")
+        publishStaged(fs, nxt, cur)
       }
     }
     // eager-unpersist discipline: every consumer has materialized; a
@@ -1681,23 +1615,10 @@ object CorpusStream {
                         checkpoint: String, n: Int = 3, bands: Int = 8,
                         rowsPerBand: Int = 4, compactEvery: Int = 0,
                         lockStaleMs: Long = CompactLockStaleMs)
-      : StreamingQuery = {
-    val streamId = new StreamIdMemo("ccMaintenanceSink", checkpoint)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val sid = streamId.get(spark)
-          ccProcessBatch(batch, batchId, indexPath, statePath,
-            n, bands, rowsPerBand, selfOwner = Some(sid),
-            lockStaleMs = lockStaleMs)
-          if (compactEvery > 0 &&
-              pendingBatchDirs(spark, indexPath, batchId) >= compactEvery)
-            compactBandIndex(spark, indexPath, batchId, owner = sid,
-              lockStaleMs = lockStaleMs)
-        }
-      }
-      .start()
-  }
+      : StreamingQuery =
+    bandIndexSink(docs, indexPath, checkpoint, "ccMaintenanceSink", compactEvery,
+        lockStaleMs) { (batch, batchId, streamId) =>
+      ccProcessBatch(batch, batchId, indexPath, statePath, n, bands, rowsPerBand,
+        selfOwner = Some(streamId), lockStaleMs = lockStaleMs)
+    }
 }

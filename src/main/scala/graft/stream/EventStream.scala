@@ -88,14 +88,18 @@ object EventStream {
       .groupBy(window(col("created_ts"), "1 hour"), col("severity"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** The reference's foreachBatch sink: count batch, skip empty, append
-    * parquet, checkpointed (`etl-events.py:107-122`). */
+  /** The reference's foreachBatch sink (`etl-events.py:107-122`):
+    * skip empty batches, write parquet, checkpointed. Each batch
+    * OVERWRITES its own `outDir/batch=<id>` partition instead of
+    * appending, so a batch that replays after a crash (written, not yet
+    * committed) rewrites its rows rather than duplicating them. Readers
+    * see the partition column `batch`; one stream owns one `outDir`. */
   def parquetSink(cleaned: DataFrame, outDir: String, checkpointDir: String): DataStreamWriter[Row] =
     cleaned.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) batch.write.mode("append").parquet(outDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
 
   /** Convenience: start with the synchronous-test-friendly default

@@ -67,6 +67,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val out = spark.read.parquet(s"$dir/out")
     assert(out.count() == 2, "each event written exactly once across restart")
     assert(out.select("id").as[String].collect().sorted.toSeq == Seq("EV-R1", "EV-R2"))
+    // a batch written but not committed (death before the commit)
+    // replays on restart: its rows must not be written twice
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/cp/commits/1"), false))
+    val q3 = startQuery()
+    try q3.processAllAvailable() finally q3.stop()
+    assert(spark.read.parquet(s"$dir/out").select("id").as[String].collect().sorted.toSeq
+      == Seq("EV-R1", "EV-R2"), "a replayed batch must write each event exactly once")
   }
 
   test("dropDuplicatesWithinWatermark dedups repeated ids in-stream") {
@@ -383,30 +391,52 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(snapshot() === committed, "fallback scan gate must skip the replay too")
   }
 
-  test("appendedHighWater: footer stats reproduce the scan gate's high water " +
-      "exactly, and unusable shapes fall back (None)") {
-    val dir = tempDir("graft_footer_gate")
-    val tab = s"$dir/corpus"
-    def append(batchId: Long, sid: String, ids: Seq[Long]): Unit =
-      ids.toDF("doc_id")
-        .withColumn("_batch_id", lit(batchId))
-        .withColumn("_stream_id", lit(sid))
-        .write.mode("append").parquet(tab)
-    append(0L, "stream-A", Seq(1L, 2L))
-    append(1L, "stream-A", Seq(3L))
-    append(5L, "stream-B", Seq(4L))
-    assert(graft.stream.CorpusStream.appendedHighWater(spark, tab, "stream-A")
-      === Some(Some(1L)))
-    assert(graft.stream.CorpusStream.appendedHighWater(spark, tab, "stream-B")
-      === Some(Some(5L)))
-    assert(graft.stream.CorpusStream.appendedHighWater(spark, tab, "stream-C")
-      === Some(None), "unknown stream: footers readable, no matching batch")
-    // a table without the marker columns must refuse (fall back), never
-    // fabricate a high water
-    val bare = s"$dir/bare"
-    Seq(1L, 2L).toDF("doc_id").write.parquet(bare)
-    assert(graft.stream.CorpusStream.appendedHighWater(spark, bare, "stream-A")
-      === None)
+  test("maintainState staged swap: a state stranded at .next is recovered " +
+      "before the merge; a stale .next next to a live state is discarded") {
+    implicit val sctx = spark.sqlContext
+    val dir = tempDir("graft_state_swap")
+    val (state, ckpt) = (s"$dir/state", s"$dir/ckpt")
+    val mem = MemoryStream[String]
+    def start() = graft.stream.CorpusStream.vocabMaintenanceSink(
+      mem.toDF().toDF("text"), state, ckpt)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val (cur, nxt) = (new org.apache.hadoop.fs.Path(state),
+      new org.apache.hadoop.fs.Path(s"$state.next"))
+    def counts() = spark.read.parquet(state).select("token", "cnt")
+      .as[(String, Long)].collect().toMap
+    val q1 = start()
+    try { mem.addData("x y"); q1.processAllAvailable() } finally q1.stop()
+    // death between delete(state) and the rename: only .next holds it
+    assert(fs.rename(cur, nxt), "test setup: strand the state at .next")
+    val q2 = start()
+    try { mem.addData("y z"); q2.processAllAvailable() } finally q2.stop()
+    assert(!fs.exists(nxt) && counts() == Map("x" -> 1L, "y" -> 2L, "z" -> 1L),
+      "the stranded state must be recovered and merged into")
+    // death mid-write of .next: a half-write next to the live state. An
+    // empty batch writes nothing, so only the discard removes it
+    Seq(("bogus", 99L)).toDF("token", "cnt").write.parquet(nxt.toString)
+    val q3 = start()
+    try { mem.addData(Seq.empty[String]); q3.processAllAvailable() } finally q3.stop()
+    assert(graft.stream.CorpusStream.committedHighWater(spark, ckpt) == 2L,
+      "fixture: the empty add must commit as its own micro-batch")
+    assert(!fs.exists(nxt) && counts() == Map("x" -> 1L, "y" -> 2L, "z" -> 1L),
+      "a stale .next must be discarded, never published")
+  }
+
+  /** Sequential reference for the admission sink: each batch admitted
+    * against the accumulated ADMITTED docs of earlier batches; the
+    * sorted admitted ids. */
+  private def sequentialAdmission(batches: Seq[Seq[(Long, String)]]): Seq[Long] = {
+    var acc = Seq.empty[(Long, String)]
+    batches.flatMap { b =>
+      val bd = b.toDF("doc_id", "text")
+      val adm = (if (acc.isEmpty) bd.select("doc_id")
+        else graft.dedup.Dedup.incrementalNearDup(
+          acc.toDF("doc_id", "text"), bd, 3, 8, 4, 0.5))
+        .as[Long].collect().toSet
+      acc = acc ++ b.filter(x => adm(x._1))
+      adm
+    }.sorted
   }
 
   test("admissionSink: streamed admission == sequential batch admission; restart-safe") {
@@ -436,25 +466,53 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       mem.addData(batches(2): _*); q2.processAllAvailable()
     } finally q2.stop()
     val got = spark.read.parquet(corpus).select("doc_id").as[Long].collect().sorted
-    // sequential reference: admit each batch against accumulated ADMITTED docs
-    var acc = Seq.empty[(Long, String)]
-    val want = scala.collection.mutable.ArrayBuffer.empty[Long]
-    batches.foreach { b =>
-      val bd = b.toDF("doc_id", "text")
-      val adm = (if (acc.isEmpty) bd.select("doc_id")
-        else graft.dedup.Dedup.incrementalNearDup(
-          acc.toDF("doc_id", "text"), bd, 3, 8, 4, 0.5))
-        .as[Long].collect().toSet
-      want ++= adm.toSeq.sorted
-      acc = acc ++ b.filter(x => adm(x._1))
-    }
-    assert(got.toSeq == want.toSeq.sorted)
+    assert(got.toSeq == sequentialAdmission(batches))
     assert(!got.contains(11L) && !got.contains(21L), "near/exact dups must be rejected")
     assert(got.contains(13L), "in-batch near-dup is admitted by contract")
     // the index holds exactly the admitted docs' band rows
     val idxDocs = spark.read.parquet(idx).select("doc_id").distinct()
       .as[Long].collect().sorted
     assert(idxDocs.toSeq == got.toSeq)
+  }
+
+  test("admissionSink: a corpus write interrupted after some of its files " +
+      "is repaired by the replay") {
+    val dir = tempDir("graft_adm_partial")
+    val (idx, corpus, ckpt) = (s"$dir/idx", s"$dir/corpus", s"$dir/ckpt")
+    implicit val sctx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)](3) // 3 partitions: a batch writes 3 files
+    def start() = graft.stream.CorpusStream.admissionSink(
+      mem.toDF().toDF("doc_id", "text"), idx, corpus, ckpt, 3, 8, 4, 0.5)
+    val rnd = new scala.util.Random(7L)
+    val words = (0 until 300).map(i => s"w$i")
+    def text() = Seq.fill(12)(words(rnd.nextInt(words.length))).mkString(" ")
+    // 8 fresh docs per batch, plus near copies of two earlier admitted ones
+    val fresh = (0 until 3).map(b => (0 until 8).map(i => ((b * 100 + i).toLong, text())))
+    val batches = fresh.indices.map(b => fresh(b) ++ (if (b == 0) Nil
+      else fresh(b - 1).take(2).map { case (id, t) => (id + 50L, t + " extra") }))
+    val q1 = start()
+    try batches.foreach { b => mem.addData(b: _*); q1.processAllAvailable() }
+    finally q1.stop()
+    // a job commit interrupted after only some of the last batch's
+    // corpus files landed: drop all but one of them, and its checkpoint
+    // commit, so the restart replays the batch
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val last = batches.last.map(_._1).toSet
+    import scala.jdk.CollectionConverters._
+    val lastFiles = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(corpus), Array("parquet"), true).asScala.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(f.getPath))
+      .filter(p => spark.read.parquet(p.toString).select("doc_id").as[Long]
+        .collect().exists(last))
+    assert(lastFiles.size >= 2, s"fixture: the last batch must span files: $lastFiles")
+    lastFiles.tail.foreach(p => assert(fs.delete(p, false)))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/2"), false))
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    val got = spark.read.parquet(corpus).select("doc_id").as[Long].collect().sorted.toSeq
+    assert(got.distinct == got, s"a replay must not duplicate documents: $got")
+    assert(got == sequentialAdmission(batches),
+      "the replay must restore the interrupted batch's documents")
   }
 
   test("admissionSink: a steady micro-batch runs at most " +
@@ -1059,87 +1117,111 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       s"resolution must still equal batch CC:\n got=$got\nwant=$want")
   }
 
+  /** The two band-index sinks, as inputs of the specs that hold for
+    * both: `start(docs, index, output, checkpoint)`, and `groups(output)`,
+    * the sink's output as doc id → group id (admission: each admitted
+    * doc is its own group, a rejected doc is absent). */
+  private case class BandSink(
+      name: String,
+      start: (org.apache.spark.sql.DataFrame, String, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery,
+      groups: String => Map[Long, Long])
+
+  private lazy val bandSinks = Seq(
+    BandSink("ccMaintenanceSink",
+      graft.stream.CorpusStream.ccMaintenanceSink(_, _, _, _, 3, 8, 4),
+      out => graft.stream.CorpusStream.readCcState(spark, out)
+        .as[(Long, Long)].collect().toMap),
+    BandSink("admissionSink",
+      graft.stream.CorpusStream.admissionSink(_, _, _, _, 3, 8, 4, 0.5),
+      out => spark.read.parquet(out).select("doc_id").as[Long]
+        .collect().map(d => d -> d).toMap))
+
   test("a fresh foreign .compact_lock makes the probe REFUSE loudly; a " +
       "stale one (crashed compactor) is passed without wedging the sink") {
     import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_lock")
-    val (idx, state, ckpt) = (s"$dir/idx", s"$dir/state", s"$dir/ckpt")
-    implicit val sctx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    def start() = CorpusStream.ccMaintenanceSink(
-      mem.toDF().toDF("doc_id", "text"), idx, state, ckpt, 3, 8, 4)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val q1 = start()
-    try { mem.addData((9L, dA)); q1.processAllAvailable() } finally q1.stop()
-    // an external fold IN FLIGHT: fresh lock, foreign owner — the exact
-    // window the same-session running-sink guard cannot see (a sink
-    // (re)started during the fold, possibly in another application)
-    val lock = CorpusStream.compactLockPath(idx)
-    val out = fs.create(lock, true)
-    out.write("external:other-process".getBytes("UTF-8")); out.close()
-    val q2 = start()
-    try {
-      mem.addData((4L, "one two three four five six seven eight"))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q2.processAllAvailable()
-      }
-      assert(e.getMessage.contains("IN FLIGHT"),
-        s"the probe must refuse with the lock message, got: ${e.getMessage}")
-    } finally q2.stop()
-    assert(fs.exists(lock), "a refusal must not touch the foreign lock")
-    // age the lock past the staleness bound: a CRASHED compactor must
-    // not wedge the sink forever — the replayed batch now proceeds
-    fs.setTimes(lock,
-      System.currentTimeMillis() - CorpusStream.CompactLockStaleMs - 1000L, -1L)
-    val q3 = start()
-    try q3.processAllAvailable() finally q3.stop() // replays the failed batch
-    assert(fs.exists(lock),
-      "the probe path is read-only on foreign locks — cleanup belongs to " +
-        "the next compactBandIndex")
-    val byDoc = CorpusStream.readCcState(spark, state)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(byDoc.keySet == Set(9L, 4L),
-      s"the replay past the stale lock must commit batch 1: $byDoc")
-    // and the next compaction supersedes the stale lock and cleans it
-    CorpusStream.compactBandIndex(spark, idx, ckpt)
-    assert(!fs.exists(lock), "compaction must clean a stale lock")
+    bandSinks.foreach { sink =>
+      val dir = tempDir("graft_cc_lock")
+      val (idx, out, ckpt) = (s"$dir/idx", s"$dir/out", s"$dir/ckpt")
+      implicit val sctx = spark.sqlContext
+      val mem = MemoryStream[(Long, String)]
+      def start() = sink.start(mem.toDF().toDF("doc_id", "text"), idx, out, ckpt)
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val q1 = start()
+      try { mem.addData((9L, dA)); q1.processAllAvailable() } finally q1.stop()
+      // an external fold IN FLIGHT: fresh lock, foreign owner — the exact
+      // window the same-session running-sink guard cannot see (a sink
+      // (re)started during the fold, possibly in another application)
+      val lock = CorpusStream.compactLockPath(idx)
+      val lockOut = fs.create(lock, true)
+      lockOut.write("external:other-process".getBytes("UTF-8")); lockOut.close()
+      val q2 = start()
+      try {
+        mem.addData((4L, "one two three four five six seven eight"))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q2.processAllAvailable()
+        }
+        assert(e.getMessage.contains("IN FLIGHT"),
+          s"${sink.name}: the probe must refuse with the lock message, got: ${e.getMessage}")
+      } finally q2.stop()
+      assert(fs.exists(lock), s"${sink.name}: a refusal must not touch the foreign lock")
+      // age the lock past the staleness bound: a CRASHED compactor must
+      // not wedge the sink forever — the replayed batch now proceeds
+      fs.setTimes(lock,
+        System.currentTimeMillis() - CorpusStream.CompactLockStaleMs - 1000L, -1L)
+      val q3 = start()
+      try q3.processAllAvailable() finally q3.stop() // replays the failed batch
+      assert(fs.exists(lock),
+        s"${sink.name}: the probe path is read-only on foreign locks — cleanup " +
+          "belongs to the next compactBandIndex")
+      val byDoc = sink.groups(out)
+      assert(byDoc.keySet == Set(9L, 4L),
+        s"${sink.name}: the replay past the stale lock must commit batch 1: $byDoc")
+      // and the next compaction supersedes the stale lock and cleans it
+      CorpusStream.compactBandIndex(spark, idx, ckpt)
+      assert(!fs.exists(lock), s"${sink.name}: compaction must clean a stale lock")
+    }
   }
 
   test("a sink's OWN crashed-fold lock is self-recovered by the next probe") {
     import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_ownlock")
-    val (idx, state, ckpt) = (s"$dir/idx", s"$dir/state", s"$dir/ckpt")
-    implicit val sctx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    def start() = CorpusStream.ccMaintenanceSink(
-      mem.toDF().toDF("doc_id", "text"), idx, state, ckpt, 3, 8, 4)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val q1 = start()
-    try { mem.addData((9L, dA)); q1.processAllAvailable() } finally q1.stop()
-    // simulate a crash INSIDE a self-compaction: the lock is held by
-    // this stream's own (checkpoint-persisted) query id and is FRESH —
-    // a foreign-lock refusal here would wedge crash recovery for the
-    // whole staleness bound; the probe must recognize itself instead
-    // (its own folds are serialized with it inside foreachBatch, so no
-    // live compactor can hold this lock)
-    val qid = CorpusStream.checkpointQueryId(spark, ckpt).get
-    val lock = CorpusStream.compactLockPath(idx)
-    val out = fs.create(lock, true)
-    out.write(qid.getBytes("UTF-8")); out.close()
-    val q2 = start()
-    try {
-      mem.addData((20L, dA.replace("kappa", "lambda")))
-      q2.processAllAvailable() // must NOT refuse
-    } finally q2.stop()
-    assert(!fs.exists(lock), "the probe must clear its own crashed-fold lock")
-    val byDoc = CorpusStream.readCcState(spark, state)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(byDoc(20L) == 9L,
-      s"the recovered probe must still reach the merge decision: $byDoc")
+    // doc 20 near-dups doc 9: the CC sink merges it into 9's group, the
+    // admission sink rejects it
+    val want = Map("ccMaintenanceSink" -> Map(9L -> 9L, 20L -> 9L),
+      "admissionSink" -> Map(9L -> 9L))
+    bandSinks.foreach { sink =>
+      val dir = tempDir("graft_cc_ownlock")
+      val (idx, out, ckpt) = (s"$dir/idx", s"$dir/out", s"$dir/ckpt")
+      implicit val sctx = spark.sqlContext
+      val mem = MemoryStream[(Long, String)]
+      def start() = sink.start(mem.toDF().toDF("doc_id", "text"), idx, out, ckpt)
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val q1 = start()
+      try { mem.addData((9L, dA)); q1.processAllAvailable() } finally q1.stop()
+      // simulate a crash INSIDE a self-compaction: the lock is held by
+      // this stream's own (checkpoint-persisted) query id and is FRESH —
+      // a foreign-lock refusal here would wedge crash recovery for the
+      // whole staleness bound; the probe must recognize itself instead
+      // (its own folds are serialized with it inside foreachBatch, so no
+      // live compactor can hold this lock)
+      val qid = CorpusStream.checkpointQueryId(spark, ckpt).get
+      val lock = CorpusStream.compactLockPath(idx)
+      val lockOut = fs.create(lock, true)
+      lockOut.write(qid.getBytes("UTF-8")); lockOut.close()
+      val q2 = start()
+      try {
+        mem.addData((20L, dA.replace("kappa", "lambda")))
+        q2.processAllAvailable() // must NOT refuse
+      } finally q2.stop()
+      assert(!fs.exists(lock), s"${sink.name}: the probe must clear its own crashed-fold lock")
+      val byDoc = sink.groups(out)
+      assert(byDoc == want(sink.name),
+        s"${sink.name}: the recovered probe must still reach its decision: $byDoc")
+    }
   }
 
   test("compactBandIndex: a fresh foreign lock refuses a second compactor; " +
