@@ -24,7 +24,14 @@ object GraftSession {
     * local defaults below keep the driver's bench comparable, and a
     * cluster deployment overrides (e.g. shuffle partition sizing,
     * join-strategy preferences) without a rebuild. Unset = exactly the
-    * pinned defaults. */
+    * pinned defaults.
+    *
+    * The `file` scheme resolves to [[ForkFreeLocalFileSystem]] and
+    * [[ForkFreeLocalFs]] (Hadoop's `FileSystem` and `FileContext` APIs):
+    * with no native libhadoop, the stock local filesystem forks a
+    * `chmod` for every file and directory it creates and a `readlink`
+    * for every checkpoint-log rename, a fixed cost of every parquet
+    * write and every streaming micro-batch. */
   def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = {
     val base = b.withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -35,6 +42,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
     applyConfOverrides(base, sys.env.get("SPARK_GRAFT_CONF"))
   }
 

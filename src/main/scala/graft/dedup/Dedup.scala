@@ -631,28 +631,26 @@ object Dedup {
   private def admitAgainst(corpusBands: DataFrame, incoming: DataFrame,
                            n: Int, bands: Int, rowsPerBand: Int,
                            minEstJaccard: Double): DataFrame =
-    admitAgainstPre(corpusBands, incoming,
-      bandedSignatures(incoming, n, bands, rowsPerBand),
-      bands * rowsPerBand, minEstJaccard)
+    incoming.select(col("doc_id"))
+      .join(rejectedIds(corpusBands, bandedSignatures(incoming, n, bands, rowsPerBand),
+        bands * rowsPerBand, minEstJaccard), Seq("doc_id"), "left_anti")
+      .orderBy(col("doc_id"))
 
-  /** [[admitAgainstBands]] with the incoming batch's band rows PREBUILT
-    * — the streaming admission sink computes them once and reuses them
-    * for the probe's residue classes, the decisions, and the index
-    * write (previously the batch was shingled twice per micro-batch). */
-  private[graft] def admitAgainstPre(corpusBands: DataFrame, incoming: DataFrame,
-                                     batchBands: DataFrame, numHashes: Int,
-                                     minEstJaccard: Double): DataFrame = {
-    val rejected = batchBands.as("b").join(corpusBands.as("c"),
+  /** The rejected half of the probe, over the incoming batch's PREBUILT
+    * band rows: the distinct doc_ids of `batchBands` whose band collides
+    * with a corpus band at signature agreement >= minEstJaccard. The
+    * streaming admission sink computes the band rows once and reuses
+    * them for the probe's residue classes, this probe, and the index
+    * write, and anti-joins the batch against this set. */
+  private[graft] def rejectedIds(corpusBands: DataFrame, batchBands: DataFrame,
+                                 numHashes: Int, minEstJaccard: Double): DataFrame =
+    batchBands.as("b").join(corpusBands.as("c"),
         col("b.band") === col("c.band") && col("b.bucket") === col("c.bucket"))
       .withColumn("est_jaccard",
         size(filter(zip_with(col("b.signature"), col("c.signature"),
           (x, y) => x === y), p => p)).cast("double") / numHashes)
       .filter(col("est_jaccard") >= minEstJaccard)
       .select(col("b.doc_id").as("doc_id")).distinct()
-    incoming.select(col("doc_id"))
-      .join(rejected, Seq("doc_id"), "left_anti")
-      .orderBy(col("doc_id"))
-  }
 
   /** Public probe against a PROVIDED corpus band table (any source —
     * in-memory, persisted, or the streaming sink's batch-partitioned

@@ -768,46 +768,6 @@ object CorpusStream {
     schema.fold(spark.read)(spark.read.schema).parquet(indexPath)
       .filter(col("batch") < batchId && col("p").isin(classes :+ -1L: _*))
 
-  /** OFFLINE compaction for the maintained band indexes: folds every
-    * `batch < uptoBatch` partition (and any existing compacted base)
-    * into ONE residue-partitioned base at `batch=-1`, then removes the
-    * consumed per-batch dirs. Probes are untouched — their
-    * `batch < batchId` filter includes -1 for every real batch id, and
-    * the base is residue-partitioned, so compaction RETROFITS trickle
-    * pruning onto bulk-written history (bulk batches write flat
-    * `p=-1`, unprunable until compacted) and bounds the per-probe file
-    * LISTING, which otherwise grows with total batch count for the
-    * life of the stream.
-    *
-    * CONTRACT: run while the sink is STOPPED, with `uptoBatch` no
-    * greater than the checkpoint's committed high water + 1 — a
-    * replayed batch only ever re-reads batches strictly below itself,
-    * all of which are then inside the base (the checkpoint-taking
-    * overload derives exactly that bound via [[committedHighWater]]).
-    * Crash-safe by the staged
-    * dot-dir discipline plus probe idempotence:
-    *  - the new base writes to `.compact_next` (dot-prefixed —
-    *    invisible to partition discovery), so a crash mid-write
-    *    changes nothing;
-    *  - a crash between deleting the old base and renaming the new one
-    *    is recovered at the NEXT invocation (stranded `.compact_next`
-    *    with no `batch=-1`);
-    *  - consumed per-batch dirs are deleted only AFTER the swap; a
-    *    crash mid-delete leaves rows duplicated between the base and
-    *    surviving dirs, which both probes tolerate by construction
-    *    (admission takes DISTINCT rejected ids; the CC probe takes a
-    *    per-bucket MIN and distinct edges), and the next compaction
-    *    REMOVES them — the fold input is de-duplicated (crash copies
-    *    are exact-row duplicates), so the base cannot inflate across
-    *    crash cycles.
-    *
-    * Cross-process serialization: the fold holds `.compact_lock`
-    * (owner-tokened, see [[checkCompactLock]]) for its whole run —
-    * probes from a sink (re)started DURING the fold refuse loudly
-    * instead of racing the post-swap per-batch dir deletes, a second
-    * compactor refuses instead of interleaving, and a lock left by a
-    * crashed compactor goes stale after [[CompactLockStaleMs]] so it
-    * cannot wedge the pipeline. */
   /** The query id Structured Streaming persists in the checkpoint
     * (`{"id":"<uuid>"}` in `<checkpoint>/metadata`) — stable across
     * restarts of THIS stream, different for any fresh-checkpoint run,
@@ -866,9 +826,23 @@ object CorpusStream {
       .foldLeft(-1L)(math.max)
   }
 
-  /** [[compactBandIndex]] with `uptoBatch` DERIVED from the sink's own
-    * checkpoint (committed high water + 1) — the safe-by-default entry
-    * that removes the one manual step from the maintenance contract.
+  /** OFFLINE compaction for the maintained band indexes: folds every
+    * `batch < uptoBatch` partition (and any existing compacted base)
+    * into ONE residue-partitioned base at `batch=-1`, then removes the
+    * consumed per-batch dirs. Probes are untouched — their
+    * `batch < batchId` filter includes -1 for every real batch id, and
+    * the base is residue-partitioned, so compaction RETROFITS trickle
+    * pruning onto bulk-written history (bulk batches write flat
+    * `p=-1`, unprunable until compacted) and bounds the per-probe file
+    * LISTING, which otherwise grows with total batch count for the
+    * life of the stream.
+    *
+    * CONTRACT: run while the sink is STOPPED, with `uptoBatch` no
+    * greater than the checkpoint's committed high water + 1 — a
+    * replayed batch only ever re-reads batches strictly below itself,
+    * all of which are then inside the base. This entry DERIVES exactly
+    * that bound from the sink's own checkpoint ([[committedHighWater]]
+    * + 1), which removes the one manual step from the contract.
     *
     * REFUSES (IllegalArgumentException) while a streaming query is
     * ACTIVE on `checkpoint` in this SparkSession: a batch committing
@@ -878,16 +852,37 @@ object CorpusStream {
     * deletes would race that query's probes. The check matches the
     * checkpoint's persisted query id (stable across restarts) against
     * `spark.streams.active`, so it holds for any restart of the sink,
-    * not just the original handle. Queries started from a DIFFERENT
-    * SparkSession or application are invisible to THIS check — but the
-    * `.compact_lock` the fold holds for its whole run covers them: a
-    * sink (re)started anywhere during the fold refuses at its probe
-    * ([[checkCompactLock]]) instead of racing the post-swap dir
-    * deletes, so the cross-application story is a lock protocol, not
-    * operator vigilance. A sink that self-compacts
+    * not just the original handle. A sink that self-compacts
     * ([[ccMaintenanceSink]]'s `compactEvery`) never hits this guard:
     * its fold runs INSIDE foreachBatch, serialized with commits and
-    * probes by Structured Streaming itself. */
+    * probes by Structured Streaming itself.
+    *
+    * Crash-safe by the staged dot-dir discipline plus probe idempotence:
+    *  - the new base writes to `.compact_next` (dot-prefixed —
+    *    invisible to partition discovery), so a crash mid-write
+    *    changes nothing;
+    *  - a crash between deleting the old base and renaming the new one
+    *    is recovered at the NEXT invocation (stranded `.compact_next`
+    *    with no `batch=-1`);
+    *  - consumed per-batch dirs are deleted only AFTER the swap; a
+    *    crash mid-delete leaves rows duplicated between the base and
+    *    surviving dirs, which both probes tolerate by construction
+    *    (admission takes DISTINCT rejected ids; the CC probe takes a
+    *    per-bucket MIN and distinct edges), and the next compaction
+    *    REMOVES them — the fold input is de-duplicated (crash copies
+    *    are exact-row duplicates), so the base cannot inflate across
+    *    crash cycles.
+    *
+    * Cross-process serialization: the fold holds `.compact_lock`
+    * (owner-tokened, see [[checkCompactLock]]) for its whole run.
+    * Queries started from a DIFFERENT SparkSession or application are
+    * invisible to the active-query check above, but a sink (re)started
+    * anywhere DURING the fold refuses loudly at its probe instead of
+    * racing the post-swap per-batch dir deletes, a second compactor
+    * refuses instead of interleaving, and a lock left by a crashed
+    * compactor goes stale after [[CompactLockStaleMs]] so it cannot
+    * wedge the pipeline: the cross-application story is a lock
+    * protocol, not operator vigilance. */
   def compactBandIndex(spark: SparkSession,
                        indexPath: String, checkpoint: String): Unit =
     compactBandIndex(spark, indexPath, checkpoint, CompactLockStaleMs)
@@ -1278,6 +1273,12 @@ object CorpusStream {
     * serve path), admitted documents land in the corpus table, and
     * their band rows extend the index for every later batch.
     *
+    * The probe is two broadcast joins and no shuffle: the batch's band
+    * rows (broadcast) join the prior index into the distinct rejected
+    * doc_ids ([[graft.dedup.Dedup.rejectedIds]]), and the batch
+    * anti-joins that broadcast set. The admitted rows are the batch's
+    * own `(doc_id, text)` rows, in the batch's order.
+    *
     * Exactly-once WITHOUT a transaction log or a replay gate, by
     * construction — the [[ccMaintenanceSink]] protocol:
     * - the index is laid out `indexPath/batch=<id>/p=<residue>/…`
@@ -1319,15 +1320,16 @@ object CorpusStream {
       val batchBands = graft.dedup.Dedup.bandRows(b, n, bands, rowsPerBand)
         .localCheckpoint()
       val classes = residueClasses(batchBands)
-      // the batch side is the broadcast side of the joins below and of
-      // the index-row join: the index is scanned once and never
-      // shuffled, nor is the batch text. An empty prior read rejects
-      // nothing, so it needs no probe job
+      // the batch bands are the broadcast side of the probe join, and the
+      // (small) rejected-id set that of the anti-join that admits the
+      // rest: the index is scanned once and never shuffled, nor are the
+      // batch's doc_ids or text. An empty prior read rejects nothing, so
+      // it needs no probe job
       val adm = probePriorIndex(spark, indexPath, batchId, classes, Some(streamId),
           lockStaleMs, Some(AdmissionIndexSchema))
-        .fold(b)(prior => b.join(broadcast(graft.dedup.Dedup.admitAgainstPre(
-          prior, b, broadcast(batchBands), bands * rowsPerBand, minEstJaccard)),
-          Seq("doc_id")))
+        .fold(b)(prior => b.join(broadcast(graft.dedup.Dedup.rejectedIds(
+          prior, broadcast(batchBands), bands * rowsPerBand, minEstJaccard)),
+          Seq("doc_id"), "left_anti"))
         .localCheckpoint()
       // idempotent writes: each overwrites THIS batch's own partition
       writeBatchIndex(
@@ -1366,74 +1368,6 @@ object CorpusStream {
     else Seq.empty[(Long, Long)].toDF("dead", "live")
   }
 
-  /** Incremental near-dup GROUP-ID maintenance — the sink that
-    * completes the maintained-state family with the "stable cluster
-    * ids at ingestion" production shape: each micro-batch extends the
-    * maintained band index and merges its documents into the
-    * maintained component state by min-label contraction restricted to
-    * TOUCHED components, instead of re-running batch CC over the whole
-    * corpus.
-    *
-    * STATE LAYOUT — append-only, so per-batch I/O is batch-bounded,
-    * never corpus-sized (the r13 second-pass fix of the initial
-    * full-rewrite design):
-    *  - `indexPath/batch=<id>/p=<residue>`: (doc_id, band, bucket, g0)
-    *    band rows in the [[IndexLayoutParts]] residue layout — each
-    *    row carries the doc's INSERT-TIME label g0, so bucket
-    *    representatives resolve to a current group without ever
-    *    scanning the doc state, and probes file-prune to the residue
-    *    classes the batch's own buckets can match;
-    *  - `statePath/docs/batch=<id>`: (doc_id, g0) — insert-only;
-    *  - `statePath/alias`: (dead, live) — the ONLY table rewritten per
-    *    batch, and it is MERGE-EVENT-bounded (one row per group label
-    *    ever retired), kept transitively COMPRESSED: every dead label
-    *    maps DIRECTLY to a live one, so resolution ([[readCcState]])
-    *    is a single left-join hop. Compression is maintained in closed
-    *    form: alias' = alias·R ∪ R for the batch's relabel map R
-    *    (alias values that R retires are rewritten through R; R's keys
-    *    were live, hence disjoint from alias keys).
-    *
-    * EQUALITY LAW (graded, q231; spec-tested incl. restart): after any
-    * replay schedule the RESOLVED state equals the batch
-    * [[graft.dedup.Dedup.minhashDedupGroups]] over the union of all
-    * batches. (a) Connectivity: every pair sharing an LSH
-    * (band, bucket) is connected at the LATER doc's arrival — each
-    * batch links its band rows to ONE representative per prior bucket
-    * (whose members are already one component, by induction) and to
-    * the in-batch bucket hub — so cumulative connectivity equals the
-    * batch star-edge closure. (b) Labels: contracted super-node ids
-    * are CURRENT live labels (= the min doc id of their component, an
-    * invariant the relabel map preserves), so the contracted CC's
-    * min-label is the true merged component minimum.
-    *
-    * EXACTLY-ONCE BY IDEMPOTENCE — this sink needs no high-water
-    * marker, unlike the additive-counter sinks (whose merges are not
-    * replay-idempotent): the docs/index writes OVERWRITE their own
-    * `batch=<id>` partition; probes read only STRICTLY EARLIER
-    * partitions; and the alias recompute is deterministic AND
-    * convergent — replaying a batch against the pre-swap alias
-    * reproduces it, and against the post-swap alias the reps resolve
-    * to already-merged labels, the contracted CC returns them
-    * unchanged, R is empty, and alias' = alias. The alias swap itself
-    * is the staged-rename skeleton (crash leaves the prior alias
-    * readable; a stranded `.next` is recovered on the next access).
-    *
-    * Scale shape per batch: O(batch·bands) band rows; the probe scans
-    * the prior index (the q199 admission probe shape — embarrassingly
-    * parallel, file-pruned to the batch's residue classes by the
-    * [[IndexLayoutParts]] layout, and restricted to THIS batch's
-    * buckets by a broadcast join BEFORE any aggregation, so only the
-    * matched postings — batch-bucket-bounded — ever shuffle); probe
-    * edges are ONE representative per touched (band, bucket), never
-    * every bucket member; the CC runs over the CONTRACTED graph (new
-    * docs + touched live labels — batch-bounded); writes are two
-    * batch-sized partitions plus the merge-bounded alias. Nothing
-    * corpus-sized is SHUFFLED or WRITTEN on the batch path; the index
-    * scan is the one corpus-SCALE read, map-only, shared with the
-    * admission sink's contract — residue pruning cuts it to ~B/P of
-    * the corpus in the trickle regime (B batch buckets ≲ P classes)
-    * and leaves the bulk regime at the full map-only scan (the
-    * coverage law at [[IndexLayoutParts]]; measured in SCALE.md). */
   /** The CC sink's per-batch PROBE, factored out so PlanSpec can gate
     * the physical plan of the round's central scale claim: the
     * corpus-sized prior index is restricted to THIS batch's buckets by
@@ -1581,7 +1515,76 @@ object CorpusStream {
       .foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)
   }
 
-  /** `compactEvery > 0` graduates SCALE.md's compaction cadence from
+  /** Incremental near-dup GROUP-ID maintenance — the sink that
+    * completes the maintained-state family with the "stable cluster
+    * ids at ingestion" production shape: each micro-batch extends the
+    * maintained band index and merges its documents into the
+    * maintained component state by min-label contraction restricted to
+    * TOUCHED components, instead of re-running batch CC over the whole
+    * corpus.
+    *
+    * STATE LAYOUT — append-only, so per-batch I/O is batch-bounded,
+    * never corpus-sized (the r13 second-pass fix of the initial
+    * full-rewrite design):
+    *  - `indexPath/batch=<id>/p=<residue>`: (doc_id, band, bucket, g0)
+    *    band rows in the [[IndexLayoutParts]] residue layout — each
+    *    row carries the doc's INSERT-TIME label g0, so bucket
+    *    representatives resolve to a current group without ever
+    *    scanning the doc state, and probes file-prune to the residue
+    *    classes the batch's own buckets can match;
+    *  - `statePath/docs/batch=<id>`: (doc_id, g0) — insert-only;
+    *  - `statePath/alias`: (dead, live) — the ONLY table rewritten per
+    *    batch, and it is MERGE-EVENT-bounded (one row per group label
+    *    ever retired), kept transitively COMPRESSED: every dead label
+    *    maps DIRECTLY to a live one, so resolution ([[readCcState]])
+    *    is a single left-join hop. Compression is maintained in closed
+    *    form: alias' = alias·R ∪ R for the batch's relabel map R
+    *    (alias values that R retires are rewritten through R; R's keys
+    *    were live, hence disjoint from alias keys).
+    *
+    * EQUALITY LAW (graded, q231; spec-tested incl. restart): after any
+    * replay schedule the RESOLVED state equals the batch
+    * [[graft.dedup.Dedup.minhashDedupGroups]] over the union of all
+    * batches. (a) Connectivity: every pair sharing an LSH
+    * (band, bucket) is connected at the LATER doc's arrival — each
+    * batch links its band rows to ONE representative per prior bucket
+    * (whose members are already one component, by induction) and to
+    * the in-batch bucket hub — so cumulative connectivity equals the
+    * batch star-edge closure. (b) Labels: contracted super-node ids
+    * are CURRENT live labels (= the min doc id of their component, an
+    * invariant the relabel map preserves), so the contracted CC's
+    * min-label is the true merged component minimum.
+    *
+    * EXACTLY-ONCE BY IDEMPOTENCE — this sink needs no high-water
+    * marker, unlike the additive-counter sinks (whose merges are not
+    * replay-idempotent): the docs/index writes OVERWRITE their own
+    * `batch=<id>` partition; probes read only STRICTLY EARLIER
+    * partitions; and the alias recompute is deterministic AND
+    * convergent — replaying a batch against the pre-swap alias
+    * reproduces it, and against the post-swap alias the reps resolve
+    * to already-merged labels, the contracted CC returns them
+    * unchanged, R is empty, and alias' = alias. The alias swap itself
+    * is the staged-rename skeleton (crash leaves the prior alias
+    * readable; a stranded `.next` is recovered on the next access).
+    *
+    * Scale shape per batch: O(batch·bands) band rows; the probe scans
+    * the prior index (the q199 admission probe shape — embarrassingly
+    * parallel, file-pruned to the batch's residue classes by the
+    * [[IndexLayoutParts]] layout, and restricted to THIS batch's
+    * buckets by a broadcast join BEFORE any aggregation, so only the
+    * matched postings — batch-bucket-bounded — ever shuffle); probe
+    * edges are ONE representative per touched (band, bucket), never
+    * every bucket member; the CC runs over the CONTRACTED graph (new
+    * docs + touched live labels — batch-bounded); writes are two
+    * batch-sized partitions plus the merge-bounded alias. Nothing
+    * corpus-sized is SHUFFLED or WRITTEN on the batch path; the index
+    * scan is the one corpus-SCALE read, map-only, shared with the
+    * admission sink's contract — residue pruning cuts it to ~B/P of
+    * the corpus in the trickle regime (B batch buckets ≲ P classes)
+    * and leaves the bulk regime at the full map-only scan (the
+    * coverage law at [[IndexLayoutParts]]; measured in SCALE.md).
+    *
+    * `compactEvery > 0` graduates SCALE.md's compaction cadence from
     * runbook guidance into the sink itself: whenever `compactEvery`
     * strictly-earlier per-batch index dirs have accumulated unfolded
     * ([[pendingBatchDirs]]), the batch folds them into the

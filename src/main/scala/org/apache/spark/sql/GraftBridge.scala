@@ -19,11 +19,14 @@ object GraftBridge {
     * DataFrame. `Dataset.unpersist` only talks to the cache manager, so
     * the MEMORY_AND_DISK blocks a local checkpoint pins are otherwise
     * unreachable from public API — this reaches the `LogicalRDD` the
-    * checkpoint wrapped and unpersists its RDD. No-op for any other
-    * plan shape. */
+    * checkpoint wrapped and frees its RDD's blocks. No-op for any other
+    * plan shape. It goes through `SparkContext.unpersistRDD`, not
+    * `RDD.unpersist`: the latter warns on every call that a locally
+    * checkpointed RDD cannot be recomputed, which is the point here. */
   def unpersistLocalCheckpoint(df: DataFrame): Unit =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed match {
-      case l: execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: execution.LogicalRDD =>
+        l.rdd.sparkContext.unpersistRDD(l.rdd.id, blocking = false)
       case _ => ()
     }
 }

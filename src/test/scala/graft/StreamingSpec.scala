@@ -13,7 +13,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
   /** Jobs one steady [[graft.stream.CorpusStream.admissionSink]]
     * micro-batch runs, as measured; a new driver action fails the spec. */
-  private val AdmissionJobsPerBatch = 13
+  private val AdmissionJobsPerBatch = 11
 
   private def eventJson(id: String, created: String, severity: String = "MINOR"): String =
     s"""{"events":[{"id":"$id","headline":"INCIDENT","status":"ACTIVE",
