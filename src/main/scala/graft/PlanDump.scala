@@ -193,10 +193,9 @@ object PlanDump {
       "COMPACTED mid-stream (sink stopped, checkpoint-derived bound, same " +
       "stream resumed): the graded tail is the identical resolved " +
       "(doc_id, group_id) state (Scan ExistingRDD after localCheckpoint), " +
-      "because compaction only re-homes batch partitions into the " +
-      "residue-partitioned batch=-1 base — post-compaction probes " +
-      "file-prune against the base exactly as trickle batches do, and the " +
-      "equality law (resolved state == batch CC) survives the fold"),
+      "because compaction only re-homes batch partitions into the flat " +
+      "batch=-1 base, which every later probe's batch < id filter reads, " +
+      "and the equality law (resolved state == batch CC) survives the fold"),
     "q233_cc_autocompact" -> ("the q231 replay with the sink folding its " +
       "OWN band index inside foreachBatch (compactEvery=1, the " +
       "pending-dir-count trigger): the graded tail is the identical " +

@@ -1065,79 +1065,17 @@ object StressBench {
       val tAll = time { mat(graft.text.Curation.curate(docs1)); () }
       println(f"STRESS curate_composite  end_to_end=$tAll%5.2fs")
     }
-    // Maintained-sink index reads (VERDICT r13 item 3): q199's
-    // admission sink and q231's CC sink re-read the prior band index
-    // every micro-batch — the one corpus-SCALE read on their batch
-    // paths (map-only; everything that shuffles is batch-bounded).
-    // This unit measures (a) ONE batch's probe against a 1x and a
-    // factor× index, under the unpartitioned full read vs the
-    // residue-pruned read the sinks now use, across batch sizes that
-    // span the trickle->bulk coverage law (a batch touching B buckets
-    // hits ~P(1-e^(-B/P)) of the P=IndexLayoutParts residue classes);
-    // and (b) the CC sink END-TO-END at a fixed 4-batch replay, whose
-    // slope shows how per-batch cost grows with the corpus. Pruning
-    // is lossless (equal buckets => equal residues), so both reads
-    // feed the IDENTICAL probe plan downstream.
-    if (only.forall(_.exists("cc_sink".startsWith))) {
-      import graft.stream.CorpusStream
-      import spark.implicits._
-      val emptyAlias = Seq.empty[(Long, Long)].toDF("dead", "live")
-      // force the residue branch: the stress index stands in for one
-      // ACCUMULATED by trickle ingestion (per-batch writes are tiny;
-      // the total is corpus-sized), which is the regime pruning serves
-      def mkIndex(df: DataFrame, dir: String): Unit =
-        CorpusStream.writeBatchIndex(
-          graft.dedup.Dedup.bandRows(
-              df.select(col("doc_id"), col("text")), 3, 8, 4)
-            .select(col("doc_id"), col("band"), col("bucket"))
-            .withColumn("g0", col("doc_id")),
-          s"$dir/batch=0", classes = 0, trickleMaxClasses = Long.MaxValue)
-      def probe(dir: String, newBands: DataFrame, cls: Seq[Long],
-                pruned: Boolean): Double =
-        time {
-          val prior =
-            if (pruned) CorpusStream.readPriorIndex(spark, dir, 1L, cls)
-            else spark.read.parquet(dir).filter(col("batch") < 1L)
-          CorpusStream.ccProbeRepEdges(prior, newBands, emptyAlias).count()
-        }
-      val idx1 = java.nio.file.Files.createTempDirectory("ccidx1").toString
-      val idxN = java.nio.file.Files.createTempDirectory("ccidxN").toString
-      mkIndex(docs1, idx1)
-      mkIndex(docsN, idxN)
-      for (bsz <- Seq(4, 24, 500)) {
-        val batchDocs = docs1.orderBy(col("doc_id")).limit(bsz)
-          .select(col("doc_id"), col("text")).localCheckpoint()
-        val newBands = graft.dedup.Dedup.bandRows(batchDocs, 3, 8, 4)
-          .select(col("doc_id"), col("band"), col("bucket")).localCheckpoint()
-        val cls = CorpusStream.residueClasses(newBands)
-        probe(idx1, newBands, cls, pruned = true) // warm-up: JIT + codegen
-        val f1 = probe(idx1, newBands, cls, pruned = false)
-        val p1 = probe(idx1, newBands, cls, pruned = true)
-        val fN = probe(idxN, newBands, cls, pruned = false)
-        val pN = probe(idxN, newBands, cls, pruned = true)
-        // rows the scan DECODES per route — the honest at-scale metric
-        // (local wall clocks are page-cache-confounded: a cluster read
-        // is remote, so bytes/rows scanned is what a probe pays)
-        val rowsFull = spark.read.parquet(idxN).filter(col("batch") < 1L).count()
-        val rowsPruned = CorpusStream.readPriorIndex(spark, idxN, 1L, cls).count()
-        println(f"STRESS cc_probe batch=$bsz%-4d classes=${cls.length}%3d/" +
-          f"${CorpusStream.IndexLayoutParts}  ${factor}x rows: " +
-          f"full=$rowsFull%,d pruned=$rowsPruned%,d " +
-          f"(${100.0 * rowsPruned / math.max(rowsFull, 1L)}%.0f%%)  " +
-          f"1x: full=$f1%5.2fs pruned=$p1%5.2fs  " +
-          f"${factor}x: full=$fN%5.2fs pruned=$pN%5.2fs")
-      }
-      Seq(idx1, idxN).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-      run("cc_sink_e2e",
-        CorpusStream.maintainedCcGroups(docs1, 4).count(),
-        CorpusStream.maintainedCcGroups(docsN, 4).count())
-    }
+    // The CC sink END-TO-END at a fixed 4-batch replay, whose slope
+    // shows how per-batch cost grows with the corpus (the prior-index
+    // scan is the one corpus-SCALE read on its batch path).
+    run("cc_sink_e2e",
+      graft.stream.CorpusStream.maintainedCcGroups(docs1, 4).count(),
+      graft.stream.CorpusStream.maintainedCcGroups(docsN, 4).count())
     // q231 stage attribution (VERDICT r14 item 4): the heaviest graded
     // query is a 3-batch replay of the CC sink; decompose its per-batch
     // cost through the CcStageTimer seam on ccProcessBatch — the EXACT
     // body the sink runs (no measurement fork). Stages: band (batch
-    // checkpoint + minhash bands + residue classes), probe (prior-index
+    // checkpoint + minhash bands), probe (prior-index
     // read + rep edges), cc (contracted components + relabel + doc
     // rows), write (two batch partitions), alias (staged-rename swap).
     // The residual between cc_sink_e2e and the stage sum is the
@@ -1195,27 +1133,22 @@ object StressBench {
       phaseSplit(docs1, "1x")
       phaseSplit(docsN, s"${factor}x")
     }
-    // Accumulated-trickle regime (VERDICT r14 item 3): r14's cc_probe
-    // rows probed a 100x index written in ONE pass, standing in for an
-    // index ACCUMULATED by trickle ingestion — but the file-count /
-    // listing growth (hundreds of batch=<id> dirs x up to 256 p=
-    // subdirs) is exactly what compactBandIndex trades against, so
-    // measure it on a GENUINELY accumulated index: nBatches
-    // trickle-sized batches (small enough that the residue branch
-    // engages by its own threshold, no override), then (a) recursive
-    // file count + partition-discovery wall + one trickle probe wall
-    // on the accumulated layout, (b) compactBandIndex's own cost under
-    // the real uptoBatch bound, (c) the same three numbers on the
-    // folded base. Listing cost is driven by dir/file COUNT, not row
-    // volume, so a 1x-corpus accumulation isolates the claim; the 100x
-    // row-volume behavior stays covered by cc_probe's rows-decoded
-    // metric above.
+    // Accumulated-trickle regime (VERDICT r14 item 3): the file-count /
+    // listing growth of hundreds of batch=<id> dirs is exactly what
+    // compactBandIndex trades against, so measure it on a GENUINELY
+    // accumulated index: nBatches trickle-sized batches written as the
+    // sinks write them, then (a) recursive file count +
+    // partition-discovery wall + one trickle probe wall on the
+    // accumulated layout, (b) compactBandIndex's own cost under the
+    // real uptoBatch bound, (c) the same three numbers on the folded
+    // base. Listing cost is driven by dir/file COUNT, not row volume,
+    // so a 1x-corpus accumulation isolates the claim.
     if (only.forall(_.exists("cc_accum".startsWith))) {
       import graft.stream.CorpusStream
       val dir = java.nio.file.Files.createTempDirectory("ccaccum").toString
       val rows = docs1.select(col("doc_id"), col("text")).localCheckpoint()
       val total = rows.count()
-      val batchSize = 15L // <= ~18 docs keeps classes <= P/2: the REAL trickle branch
+      val batchSize = 15L
       val nBatches = ((total + batchSize - 1) / batchSize).toInt
       val tAccum = time {
         (0 until nBatches).foreach { b =>
@@ -1223,23 +1156,11 @@ object StressBench {
           val bands = graft.dedup.Dedup.bandRows(batch, 3, 8, 4)
             .select(col("doc_id"), col("band"), col("bucket"))
             .withColumn("g0", col("doc_id")).localCheckpoint()
-          CorpusStream.writeBatchIndex(bands, s"$dir/batch=$b",
-            CorpusStream.residueClasses(bands).length)
+          bands.write.mode("overwrite").parquet(s"$dir/batch=$b")
           org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(bands)
         }
       }
       val fs = CorpusStream.fsFor(spark, new org.apache.hadoop.fs.Path(dir))
-      // the unit measures the TRICKLE regime: if ANY batch drifts past
-      // the residue threshold (doc_ids assign by mod nBatches, so a
-      // skewed residue class — not just batch 0 — can exceed the class
-      // cap), fail loudly instead of silently measuring a layout
-      // contaminated by bulk-branch writes (ADVICE r15)
-      val bulkDirs = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$dir/batch=*/p=-1"))
-      require(bulkDirs == null || bulkDirs.isEmpty,
-        s"cc_accum batches took the BULK branch " +
-          s"(${Option(bulkDirs).map(_.length).getOrElse(0)} of $nBatches); " +
-          "shrink batchSize")
       def fileCount(p: String): Long = {
         val it = fs.listFiles(new org.apache.hadoop.fs.Path(p), true)
         var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
@@ -1254,11 +1175,10 @@ object StressBench {
         .localCheckpoint()
       val probeBands = graft.dedup.Dedup.bandRows(probeDocs, 3, 8, 4)
         .select(col("doc_id"), col("band"), col("bucket")).localCheckpoint()
-      val cls = CorpusStream.residueClasses(probeBands)
       val emptyAlias = Seq.empty[(Long, Long)].toDF("dead", "live")
       def probeWall(): Double = time {
         CorpusStream.ccProbeRepEdges(
-          CorpusStream.readPriorIndex(spark, dir, nBatches.toLong, cls),
+          CorpusStream.readPriorIndex(spark, dir, nBatches.toLong),
           probeBands, emptyAlias).count()
       }
       probeWall() // warm-up: JIT + codegen (page cache stays confounded; see SCALE.md)

@@ -640,8 +640,8 @@ object Dedup {
     * band rows: the distinct doc_ids of `batchBands` whose band collides
     * with a corpus band at signature agreement >= minEstJaccard. The
     * streaming admission sink computes the band rows once and reuses
-    * them for the probe's residue classes, this probe, and the index
-    * write, and anti-joins the batch against this set. */
+    * them for this probe and the index write, and anti-joins the batch
+    * against this set. */
   private[graft] def rejectedIds(corpusBands: DataFrame, batchBands: DataFrame,
                                  numHashes: Int, minEstJaccard: Double): DataFrame =
     batchBands.as("b").join(corpusBands.as("c"),

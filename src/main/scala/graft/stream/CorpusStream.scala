@@ -71,11 +71,11 @@ object CorpusStream {
     * crash mid-batch leaves the previous state readable; checkpoint
     * retry then re-merges the SAME batch — counts would double, so the
     * batch is deduplicated against the state's high-water batch id
-    * (`_batch_id` column), keeping the merge idempotent exactly like
-    * the quarantine gate above.
+    * (the [[StateMetaFile]] sidecar), keeping the merge idempotent
+    * exactly like the quarantine gate above.
     *
-    * The high-water check is scoped to the STREAM (`_stream_id`, the
-    * checkpoint's stable query id — it survives restarts): batch ids
+    * The high-water check is scoped to the STREAM (the checkpoint's
+    * stable query id, which survives restarts): batch ids
     * restart at 0 under a fresh checkpoint, and an unscoped check would
     * silently drop every early batch of the new stream as "already
     * merged". Under a different stream id nothing is skipped — note
@@ -158,13 +158,12 @@ object CorpusStream {
 
   /** [[replayGraded]] for a [[maintainState]] sink started as
     * `sink(stream, statePath, checkpoint)`: one lifetime over every
-    * residue class, and the result is the final state table without
-    * its marker columns. */
+    * residue class, and the result is the final state table. */
   private def replayMaintained(rows: DataFrame, nBatches: Int, tag: String)(
       sink: (DataFrame, String, String) => StreamingQuery): DataFrame =
     replayGraded(rows, nBatches, tag) { r =>
       r.run(sink(r.stream, r("state"), r("ckpt")))
-      rows.sparkSession.read.parquet(r("state")).drop("_batch_id", "_stream_id")
+      rows.sparkSession.read.parquet(r("state"))
     }
 
   /** Exact distinct in-domain tokens per source: the batch twin the
@@ -529,11 +528,22 @@ object CorpusStream {
     * shared by the maintained state, the CC alias table and the
     * compacted band-index base: a death between `delete(cur)` and the
     * rename leaves the new copy stranded at `next`, so move it into
-    * place. RENAME-ONLY: a `next` next to a live `cur` is left alone,
-    * because whether it is a stale half-write each caller decides. */
-  private def recoverStaged(fs: FileSystem, next: Path, cur: Path): Unit =
-    if (!fs.exists(cur) && fs.exists(next))
+    * place — but only when `complete(next)` holds, i.e. the marker the
+    * copy's writer puts down LAST is there. A death inside the FIRST
+    * write also leaves `next` without `cur`, holding a partial job
+    * commit or only `_temporary/`; promoting that would publish a
+    * truncated or unreadable state. RENAME-ONLY: an incomplete `next`,
+    * or one next to a live `cur`, is left alone, because whether it is
+    * a stale half-write each caller decides. */
+  private def recoverStaged(fs: FileSystem, next: Path, cur: Path)(
+      complete: Path => Boolean): Unit =
+    if (!fs.exists(cur) && fs.exists(next) && complete(next))
       require(fs.rename(next, cur), s"recovery rename failed: $next -> $cur")
+
+  /** The completion marker of a Spark parquet write: the committer
+    * creates `_SUCCESS` after every file of the job is in place. */
+  private def jobCommitted(fs: FileSystem)(dir: Path): Boolean =
+    fs.exists(new Path(dir, "_SUCCESS"))
 
   /** Publish half of the staged swap: `next` is fully written, so
     * delete `cur` and rename `next` onto it. A crash between the two
@@ -563,9 +573,8 @@ object CorpusStream {
   }
 
   /** The sidecar's (stream_id, batch_id), or None when absent or
-    * unreadable — the caller then falls back to the pre-sidecar gate
-    * (a state table written by an older build has no sidecar but is
-    * still gated correctly, just at the old full-scan price). */
+    * unreadable. It is written last into `.next`, so None there means
+    * an incomplete write; a published state always has one. */
   private[graft] def readStateMeta(fs: FileSystem, dir: Path): Option[(String, Long)] =
     try {
       val p = new Path(dir, StateMetaFile)
@@ -597,20 +606,20 @@ object CorpusStream {
   /** The exactly-once parquet state-table skeleton shared by the
     * maintenance sinks: staged `.next` rename (crash leaves the prior
     * state readable), recovery of a stranded rename, and the
-    * stream-scoped (`_stream_id`, `_batch_id`) high-water gate that
-    * makes checkpoint replays idempotent. A sink is its `delta` (one
-    * micro-batch's own state rows) and its `merge` law, which folds
-    * the prior state (WITHOUT the marker columns) with the delta; the
-    * first batch's state is the delta itself.
+    * stream-scoped high-water gate that makes checkpoint replays
+    * idempotent. A sink is its `delta` (one micro-batch's own state
+    * rows) and its `merge` law, which folds the prior state with the
+    * delta; the first batch's state is the delta itself.
     *
     * The replay gate reads the [[StateMetaFile]] sidecar (one small
-    * file) rather than scanning the state parquet: the sidecar is
-    * written into `.next` BEFORE the swap, so the atomic rename
-    * publishes data and high-water together and every crash window
-    * behaves exactly as before — a crash before the rename leaves the
-    * old state AND old sidecar (replay re-merges, correct), a crash
-    * after leaves the new pair (replay is gated off, correct). States
-    * predating the sidecar fall back to the original full-scan gate. */
+    * file): it is written into `.next` after the data and BEFORE the
+    * swap, so the atomic rename publishes data and high-water together
+    * — a crash before the rename leaves the old state AND old sidecar
+    * (replay re-merges, correct), a crash after leaves the new pair
+    * (replay is gated off, correct). The sidecar is also the `.next`
+    * completion marker [[recoverStaged]] requires, so every published
+    * state carries one, and a state without a readable sidecar fails
+    * the batch instead of being merged into a second time. */
   private def maintainState(rows: DataFrame, statePath: String, checkpoint: String,
                             sinkName: String)(delta: DataFrame => DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
@@ -627,146 +636,49 @@ object CorpusStream {
         // fresh-checkpoint run (always present inside foreachBatch,
         // resolved once per sink start by the memo)
         val streamId = streamIdMemo.get(spark)
-        recoverStaged(fs, nxt, cur)
-        if (fs.exists(nxt)) fs.delete(nxt, true) // stale half-write
+        recoverStaged(fs, nxt, cur)(readStateMeta(fs, _).isDefined)
+        if (fs.exists(nxt)) fs.delete(nxt, true) // stale or incomplete half-write
         val curExists = fs.exists(cur)
-        val alreadyMerged = curExists && (readStateMeta(fs, cur) match {
-          case Some((sid, bid)) => sid == streamId && bid >= batchId
-          case None => // pre-sidecar state: the original full-scan gate
-            val p = spark.read.parquet(statePath)
-            val sameStream =
-              if (p.columns.contains("_stream_id"))
-                p.filter(col("_stream_id") === streamId) else p
-            sameStream.agg(max(col("_batch_id"))).head() match {
-              case r if r.isNullAt(0) => false
-              case r => r.getLong(0) >= batchId
-            }
-        })
+        val alreadyMerged = curExists && {
+          val (sid, bid) = readStateMeta(fs, cur).getOrElse(sys.error(
+            s"$sinkName: state $cur has no readable $StateMetaFile high-water sidecar"))
+          sid == streamId && bid >= batchId
+        }
         if (!batch.isEmpty && !alreadyMerged) {
           val d = delta(batch)
-          val merged = if (!curExists) d
-            else merge(spark.read.parquet(statePath).drop("_batch_id", "_stream_id"), d)
-          merged.withColumn("_batch_id", lit(batchId))
-            .withColumn("_stream_id", lit(streamId))
-            .write.mode("overwrite").parquet(nxt.toString)
-          writeStateMeta(fs, nxt, streamId, batchId) // inside .next: swaps atomically
+          val merged = if (!curExists) d else merge(spark.read.parquet(statePath), d)
+          merged.write.mode("overwrite").parquet(nxt.toString)
+          writeStateMeta(fs, nxt, streamId, batchId) // last into .next: swaps atomically
           publishStaged(fs, nxt, cur)
         }
       }
       .start()
   }
 
-  /** Residue-class layout for the maintained band indexes (shared by
-    * [[admissionSink]] and [[ccMaintenanceSink]]): a TRICKLE batch's
-    * band rows land under `batch=<id>/p=<pmod(bucket, P)>` (a BULK
-    * batch writes flat as the `p=-1` class — see
-    * [[IndexTrickleMaxClasses]]), and each probe lists only `batch < id`
-    * AND the residue classes its OWN buckets can match, plus `p=-1` —
-    * lossless (equal buckets have equal residues), and the prune set
-    * is bounded by P, so it collects driver-side safely.
-    *
-    * Coverage law: a batch touching B distinct buckets hits
-    * ≈ P·(1 − e^(−B/P)) residue classes, so file-read pruning wins in
-    * the TRICKLE regime (B ≲ P — the prior index read drops to ~B/P of
-    * the corpus) and degrades to the full map-only scan in the BULK
-    * regime (B ≫ P), never below the unpartitioned layout (measured:
-    * StressBench `cc_probe_*`, adjudicated in SCALE.md). P also bounds
-    * the per-batch file count (the write-side repartition) — raising P
-    * buys more trickle pruning at the price of more, smaller files. */
-  private[graft] val IndexLayoutParts = 256
-
-  /** Bulk/trickle split for the residue layout: a batch touching MORE
-    * residue classes than this writes FLAT into the single `p=-1`
-    * class that every probe reads — by the coverage law its buckets
-    * saturate the classes anyway, so partitioning it would buy no
-    * pruning and cost a shuffle plus P small files per batch
-    * (measured: the unconditional layout tripled the graded q199/q231
-    * replays, whose batches are bulk). At or under it — future probes
-    * read ≤ half of this batch's rows on average, shrinking as batches
-    * shrink — the batch writes residue-partitioned. The branch is a
-    * pure function of the batch's rows (its residue-class count, which
-    * the probe already collected), so replays take the same branch and
-    * the write stays idempotent. */
-  private[graft] val IndexTrickleMaxClasses = IndexLayoutParts.toLong / 2
-
-  private def bucketResidue: org.apache.spark.sql.Column =
-    pmod(col("bucket"), lit(IndexLayoutParts.toLong))
-
-  /** The batch's residue classes — ONE bounded driver action per
-    * micro-batch, shared by the probe's file pruning and the write-side
-    * bulk/trickle branch (a deterministic function of the batch's rows,
-    * so replays reproduce both). Each partition dedups its own classes
-    * (≤ P values) and the driver merges them: one job, where a
-    * `distinct()` would add a shuffle stage, hence a second job.
-    *
-    * SIGNED (r15, closing ADVICE r14): on a stream's FIRST batch the
-    * probe is skipped (no prior index), so this job feeds only the
-    * write branch — but it cannot be skipped or replaced there. The
-    * write branch must be the same pure function of the batch's rows
-    * on the first attempt and on a crash replay, and on replay the
-    * index EXISTS (written by the crashed attempt), so any cheaper
-    * "no-index-yet" classifier would fork the branch across exactly
-    * the crash window the layout's idempotence contract covers. One
-    * batch-bounded distinct per stream lifetime is the accepted
-    * price. */
-  private[graft] def residueClasses(batchBands: DataFrame): Seq[Long] = {
-    import batchBands.sparkSession.implicits._
-    batchBands.select(bucketResidue).as[Long]
-      .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
-  }
-
-  /** One batch's band rows in the adaptive residue layout — whole-dir
-    * overwrite of this batch's partition keeps the write
-    * replay-idempotent. `classes` is the batch's residue-class set
-    * ([[residueClasses]], already collected for the probe);
-    * `trickleMaxClasses` is the branch threshold and the
-    * test/measurement seam (StressBench raises it to force the residue
-    * branch, measuring a trickle-accumulated index at scale). */
-  private[graft] def writeBatchIndex(rows: DataFrame, batchDir: String,
-                                     classes: Int,
-                                     trickleMaxClasses: Long = IndexTrickleMaxClasses)
-      : Unit = {
-    // replays take the same branch (deterministic rows), but BOTH
-    // branches clear the dir first so a threshold change (or session
-    // partitionOverwriteMode=dynamic, whose partitioned overwrite
-    // truncates only matched partitions) can never strand the other
-    // branch's layout next to this write — the idempotence claim must
-    // not depend on session config (ADVICE r14)
-    val dir = new Path(batchDir)
-    fsFor(rows.sparkSession, dir).delete(dir, true)
-    if (classes <= trickleMaxClasses)
-      rows.withColumn("p", bucketResidue)
-        .repartition(col("p")) // files = classes touched, tasks AQE-coalesced
-        .write.mode("overwrite").partitionBy("p").parquet(batchDir)
-    else
-      rows.write.mode("overwrite").parquet(s"$batchDir/p=-1")
-  }
-
   /** [[admissionSink]]'s index layout: the [[graft.dedup.Dedup.bandRows]]
-    * columns it writes through [[writeBatchIndex]], plus the partition
-    * columns `batch` (a micro-batch id, LONG like the stream's) and the
-    * residue class `p`. The probe reads with it, so no per-batch job
-    * infers the schema from a parquet footer. */
+    * columns it writes flat to `indexPath/batch=<id>/`, plus the
+    * partition column `batch` (a micro-batch id, LONG like the
+    * stream's; -1 is the compacted base). The probe reads with it, so
+    * no per-batch job infers the schema from a parquet footer. */
   private[graft] val AdmissionIndexSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType), StructField("signature", ArrayType(IntegerType)),
       StructField("band", IntegerType), StructField("bucket", IntegerType),
-      StructField("batch", LongType), StructField("p", IntegerType)))
+      StructField("batch", LongType)))
   }
 
   /** The prior-index read for one batch's probe: strictly earlier
-    * batches only (replay-stable decisions), pruned to the batch's own
-    * residue classes PLUS the flat bulk class (`p=-1`, always read —
-    * irreducibly so, per the coverage law). `schema`, when the layout's
-    * schema is known ([[AdmissionIndexSchema]]), skips footer inference. */
+    * batches only (replay-stable decisions), pruned to them by the
+    * `batch` partition filter; the compacted base `batch=-1` is below
+    * every real batch id. `schema`, when the layout's schema is known
+    * ([[AdmissionIndexSchema]]), skips footer inference. */
   private[graft] def readPriorIndex(spark: SparkSession,
                                     indexPath: String, batchId: Long,
-                                    classes: Seq[Long],
                                     schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame =
     schema.fold(spark.read)(spark.read.schema).parquet(indexPath)
-      .filter(col("batch") < batchId && col("p").isin(classes :+ -1L: _*))
+      .filter(col("batch") < batchId)
 
   /** The query id Structured Streaming persists in the checkpoint
     * (`{"id":"<uuid>"}` in `<checkpoint>/metadata`) — stable across
@@ -828,14 +740,11 @@ object CorpusStream {
 
   /** OFFLINE compaction for the maintained band indexes: folds every
     * `batch < uptoBatch` partition (and any existing compacted base)
-    * into ONE residue-partitioned base at `batch=-1`, then removes the
-    * consumed per-batch dirs. Probes are untouched — their
-    * `batch < batchId` filter includes -1 for every real batch id, and
-    * the base is residue-partitioned, so compaction RETROFITS trickle
-    * pruning onto bulk-written history (bulk batches write flat
-    * `p=-1`, unprunable until compacted) and bounds the per-probe file
-    * LISTING, which otherwise grows with total batch count for the
-    * life of the stream.
+    * into ONE flat base at `batch=-1`, then removes the consumed
+    * per-batch dirs. Probes are untouched — their `batch < batchId`
+    * filter includes -1 for every real batch id — and compaction
+    * bounds the per-probe file LISTING, which otherwise grows with
+    * total batch count for the life of the stream.
     *
     * CONTRACT: run while the sink is STOPPED, with `uptoBatch` no
     * greater than the checkpoint's committed high water + 1 — a
@@ -863,7 +772,7 @@ object CorpusStream {
     *    changes nothing;
     *  - a crash between deleting the old base and renaming the new one
     *    is recovered at the NEXT invocation (stranded `.compact_next`
-    *    with no `batch=-1`);
+    *    with its `_SUCCESS` and no `batch=-1`);
     *  - consumed per-batch dirs are deleted only AFTER the swap; a
     *    crash mid-delete leaves rows duplicated between the base and
     *    surviving dirs, which both probes tolerate by construction
@@ -923,11 +832,15 @@ object CorpusStream {
     * before the compactor's swap, turning a racy read into permanent
     * loss of all previously-folded history. Deleting the stale case is
     * [[compactBandIndex]]'s job, which IS serialized with other
-    * compactions by the maintenance contract. */
+    * compactions by the maintenance contract. A `.compact_next`
+    * without its `_SUCCESS` (the first fold crashed or is still
+    * writing) is not promoted: the per-batch dirs it folds are deleted
+    * only after a swap, so probes still read all of them. */
   private[graft] def recoverCompactedBase(
       spark: SparkSession, indexPath: String): Unit = {
     val base = new Path(s"$indexPath/batch=-1")
-    recoverStaged(fsFor(spark, base), new Path(s"$indexPath/.compact_next"), base)
+    val fs = fsFor(spark, base)
+    recoverStaged(fs, new Path(s"$indexPath/.compact_next"), base)(jobCommitted(fs))
   }
 
   /** Default staleness bound for `.compact_lock`: a lock whose mtime
@@ -1108,34 +1021,22 @@ object CorpusStream {
     val heartbeat = lockHeartbeat(fs, lock, lockStaleMs)
     try {
       recoverCompactedBase(spark, indexPath)
-      // a stale half-write next to a live base is deleted HERE, not in
-      // the probe-path recovery: compactions are serialized with each
+      // a stale or incomplete half-write is deleted HERE, not in the
+      // probe-path recovery: compactions are serialized with each
       // other by the lock above, so no in-flight fold can own this
       // .compact_next (see recoverCompactedBase's rename-only note)
       if (fs.exists(next)) fs.delete(next, true)
       val consumed = fs.listStatus(root).toSeq.map(_.getPath)
         .filter(p => batchDirId(p.getName).exists(_ < uptoBatch))
       if (consumed.isEmpty || consumed.forall(_.getName == "batch=-1")) return
-      val rows = spark.read.option("basePath", indexPath)
+      // crash-mid-delete remnants are exact-row duplicates of base rows:
+      // the distinct removes them, so the base cannot inflate across
+      // crash cycles
+      spark.read.option("basePath", indexPath)
         .parquet(consumed.map(_.toString): _*)
-        .drop("p", "batch") // re-derive p: bulk history carried the flat -1 class
-      // crash-mid-delete remnants are exact-row duplicates of base
-      // rows; equal rows share a bucket, hence a residue class, so a
-      // WITHIN-PARTITION dedup after the layout shuffle is globally
-      // exact: sort equal rows adjacent and keep the first — one
-      // spillable in-partition sort, where a plain distinct would
-      // re-shuffle the whole index a second time on all columns. The
-      // base cannot inflate across crash cycles.
-      val key = struct(rows.columns.map(col).toIndexedSeq: _*)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("p")).orderBy(col("_k"))
-      rows.withColumn("p", bucketResidue)
-        .repartition(col("p"))
-        .withColumn("_k", key)
-        .withColumn("_dup", lag(col("_k"), 1).over(w) === col("_k"))
-        .filter(!coalesce(col("_dup"), lit(false)))
-        .drop("_k", "_dup")
-        .write.mode("overwrite").partitionBy("p").parquet(next.toString)
+        .drop("batch")
+        .distinct()
+        .write.mode("overwrite").parquet(next.toString)
       publishStaged(fs, next, base)
       consumed.filter(_.getName != "batch=-1").foreach(p => fs.delete(p, true))
     } finally {
@@ -1251,11 +1152,10 @@ object CorpusStream {
     * THROUGH an in-flight external fold ([[checkCompactLock]]), then
     * recover a base that a fold crashed between delete(base) and the
     * swap would hide ([[recoverCompactedBase]]), and return the
-    * replay-stable prior index: strictly earlier batches, pruned to
-    * this batch's residue `classes` ([[readPriorIndex]]). */
+    * replay-stable prior index: strictly earlier batches
+    * ([[readPriorIndex]]). */
   private def probePriorIndex(spark: SparkSession, indexPath: String, batchId: Long,
-                              classes: Seq[Long], selfOwner: Option[String],
-                              lockStaleMs: Long,
+                              selfOwner: Option[String], lockStaleMs: Long,
                               schema: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[DataFrame] = {
     val root = new Path(indexPath)
@@ -1263,7 +1163,7 @@ object CorpusStream {
     else {
       checkCompactLock(spark, indexPath, selfOwner, lockStaleMs)
       recoverCompactedBase(spark, indexPath)
-      Some(readPriorIndex(spark, indexPath, batchId, classes, schema))
+      Some(readPriorIndex(spark, indexPath, batchId, schema))
     }
   }
 
@@ -1281,10 +1181,9 @@ object CorpusStream {
     *
     * Exactly-once WITHOUT a transaction log or a replay gate, by
     * construction — the [[ccMaintenanceSink]] protocol:
-    * - the index is laid out `indexPath/batch=<id>/p=<residue>/…`
-    *   (the [[IndexLayoutParts]] residue layout) and the corpus
-    *   `corpusPath/batch=<id>/…`, and a batch OVERWRITES its own
-    *   partition of each — idempotent under any number of replays;
+    * - the index is laid out flat as `indexPath/batch=<id>/…` and the
+    *   corpus as `corpusPath/batch=<id>/…`, and a batch OVERWRITES its
+    *   own partition of each — idempotent under any number of replays;
     * - admission decisions probe only `batch < batchId` partitions
     *   (partition-pruned), so a replay whose own half-written bands are
     *   already on disk cannot self-collide and reaches the SAME
@@ -1315,26 +1214,24 @@ object CorpusStream {
         lockStaleMs) { (batch, batchId, streamId) =>
       val spark = batch.sparkSession
       val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-      // the batch's band rows, computed ONCE for probe residues,
-      // admission decisions, and the index write alike
+      // the batch's band rows, computed ONCE for the admission
+      // decisions and the index write alike
       val batchBands = graft.dedup.Dedup.bandRows(b, n, bands, rowsPerBand)
         .localCheckpoint()
-      val classes = residueClasses(batchBands)
       // the batch bands are the broadcast side of the probe join, and the
       // (small) rejected-id set that of the anti-join that admits the
       // rest: the index is scanned once and never shuffled, nor are the
       // batch's doc_ids or text. An empty prior read rejects nothing, so
       // it needs no probe job
-      val adm = probePriorIndex(spark, indexPath, batchId, classes, Some(streamId),
+      val adm = probePriorIndex(spark, indexPath, batchId, Some(streamId),
           lockStaleMs, Some(AdmissionIndexSchema))
         .fold(b)(prior => b.join(broadcast(graft.dedup.Dedup.rejectedIds(
           prior, broadcast(batchBands), bands * rowsPerBand, minEstJaccard)),
           Seq("doc_id"), "left_anti"))
         .localCheckpoint()
       // idempotent writes: each overwrites THIS batch's own partition
-      writeBatchIndex(
-        batchBands.join(broadcast(adm.select(col("doc_id"))), Seq("doc_id")),
-        s"$indexPath/batch=$batchId", classes.length)
+      batchBands.join(broadcast(adm.select(col("doc_id"))), Seq("doc_id"))
+        .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
       adm.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
       // eager-unpersist discipline: index and corpus written — free
       // this batch's checkpoint blocks instead of waiting on GC
@@ -1359,10 +1256,13 @@ object CorpusStream {
       .select(col("doc_id"), coalesce(col("live"), col("g0")).as("group_id"))
   }
 
+  /** The alias table, after recovering a complete `alias.next` that a
+    * crash stranded. An incomplete one stays where it is, invisible to
+    * readers, until the sink's next alias write replaces it. */
   private def readAlias(spark: SparkSession, statePath: String): DataFrame = {
     val cur = new Path(s"$statePath/alias")
     val fs = fsFor(spark, cur)
-    recoverStaged(fs, new Path(s"$statePath/alias.next"), cur)
+    recoverStaged(fs, new Path(s"$statePath/alias.next"), cur)(jobCommitted(fs))
     import spark.implicits._
     if (fs.exists(cur)) spark.read.parquet(cur.toString).select("dead", "live")
     else Seq.empty[(Long, Long)].toDF("dead", "live")
@@ -1421,15 +1321,13 @@ object CorpusStream {
       : Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // band: fingerprint the batch + its residue classes (the classes
-    // job is signed at residueClasses — shared by probe prune + write
-    // branch, deterministic under replay)
-    val (b, newBands, classes) = t("band") {
+    // band: fingerprint the batch
+    val (b, newBands) = t("band") {
       val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
       val nb = graft.dedup.Dedup.bandRows(b, n, bands, rowsPerBand)
         .select(col("doc_id"), col("band"), col("bucket"))
         .localCheckpoint()
-      (b, nb, residueClasses(nb))
+      (b, nb)
     }
     // parquet-backed already — both consumers re-scan the file,
     // cheaper than a checkpoint job for a merge-bounded table
@@ -1445,7 +1343,7 @@ object CorpusStream {
     // shuffle; an unrestricted groupBy here would shuffle the
     // whole corpus-sized index every micro-batch
     val repEdges = t("probe") {
-      probePriorIndex(spark, indexPath, batchId, classes, selfOwner, lockStaleMs)
+      probePriorIndex(spark, indexPath, batchId, selfOwner, lockStaleMs)
         .fold(Seq.empty[(Long, Long)].toDF("u", "v"))(
           ccProbeRepEdges(_, newBands, alias).localCheckpoint())
     }
@@ -1485,10 +1383,9 @@ object CorpusStream {
     t("write") {
       newDocRows.write.mode("overwrite")
         .parquet(s"$statePath/docs/batch=$batchId")
-      writeBatchIndex(
-        newBands.join(newDocRows, Seq("doc_id"))
-          .select(col("doc_id"), col("band"), col("bucket"), col("g0")),
-        s"$indexPath/batch=$batchId", classes.length)
+      newBands.join(newDocRows, Seq("doc_id"))
+        .select(col("doc_id"), col("band"), col("bucket"), col("g0"))
+        .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
     }
     // (2) alias' = alias·R ∪ R (keys disjoint: R's keys were live),
     // staged-rename swap; skipped when R is empty (alias' = alias)
@@ -1526,12 +1423,10 @@ object CorpusStream {
     * STATE LAYOUT — append-only, so per-batch I/O is batch-bounded,
     * never corpus-sized (the r13 second-pass fix of the initial
     * full-rewrite design):
-    *  - `indexPath/batch=<id>/p=<residue>`: (doc_id, band, bucket, g0)
-    *    band rows in the [[IndexLayoutParts]] residue layout — each
-    *    row carries the doc's INSERT-TIME label g0, so bucket
-    *    representatives resolve to a current group without ever
-    *    scanning the doc state, and probes file-prune to the residue
-    *    classes the batch's own buckets can match;
+    *  - `indexPath/batch=<id>`: (doc_id, band, bucket, g0) band rows,
+    *    written flat — each row carries the doc's INSERT-TIME label
+    *    g0, so bucket representatives resolve to a current group
+    *    without ever scanning the doc state;
     *  - `statePath/docs/batch=<id>`: (doc_id, g0) — insert-only;
     *  - `statePath/alias`: (dead, live) — the ONLY table rewritten per
     *    batch, and it is MERGE-EVENT-bounded (one row per group label
@@ -1565,12 +1460,14 @@ object CorpusStream {
     * to already-merged labels, the contracted CC returns them
     * unchanged, R is empty, and alias' = alias. The alias swap itself
     * is the staged-rename skeleton (crash leaves the prior alias
-    * readable; a stranded `.next` is recovered on the next access).
+    * readable; a stranded `.next` carrying its `_SUCCESS` is recovered
+    * on the next access, an incomplete one replaced by the next alias
+    * write).
     *
     * Scale shape per batch: O(batch·bands) band rows; the probe scans
     * the prior index (the q199 admission probe shape — embarrassingly
-    * parallel, file-pruned to the batch's residue classes by the
-    * [[IndexLayoutParts]] layout, and restricted to THIS batch's
+    * parallel, partition-pruned to strictly earlier batches, and
+    * restricted to THIS batch's
     * buckets by a broadcast join BEFORE any aggregation, so only the
     * matched postings — batch-bucket-bounded — ever shuffle); probe
     * edges are ONE representative per touched (band, bucket), never
@@ -1579,16 +1476,13 @@ object CorpusStream {
     * batch-sized partitions plus the merge-bounded alias. Nothing
     * corpus-sized is SHUFFLED or WRITTEN on the batch path; the index
     * scan is the one corpus-SCALE read, map-only, shared with the
-    * admission sink's contract — residue pruning cuts it to ~B/P of
-    * the corpus in the trickle regime (B batch buckets ≲ P classes)
-    * and leaves the bulk regime at the full map-only scan (the
-    * coverage law at [[IndexLayoutParts]]; measured in SCALE.md).
+    * admission sink's contract (measured in SCALE.md).
     *
     * `compactEvery > 0` graduates SCALE.md's compaction cadence from
     * runbook guidance into the sink itself: whenever `compactEvery`
     * strictly-earlier per-batch index dirs have accumulated unfolded
-    * ([[pendingBatchDirs]]), the batch folds them into the
-    * residue-partitioned base (`batch=-1`) after its own processing
+    * ([[pendingBatchDirs]]), the batch folds them into the flat
+    * base (`batch=-1`) after its own processing
     * completes. The trigger counts DIRS, not a batch-id modulus, so
     * the per-batch dir bound is tight at `compactEvery + 1` — an
     * empty micro-batch (which skips the body and writes no dir)
@@ -1609,11 +1503,11 @@ object CorpusStream {
     * the fold is recovered by the probe-path [[recoverCompactedBase]]
     * on the replay. Cadence guidance: at trickle ingestion the
     * per-probe file LISTING grows with total batch count (measured:
-    * 334 batches → 32,330 files, 12.0 s probe; folded: 257 files,
-    * 0.91 s — SCALE.md r15), so set `compactEvery` to fold before
-    * per-batch dirs reach the hundreds; 0 (default) disables
-    * self-compaction and leaves cadence to the operator via the
-    * guarded external entry. */
+    * 334 batches → 668 files, 3.65 s probe; folded: 2 files, 0.47 s —
+    * SCALE.md, "One flat band-index layout"), so set `compactEvery` to
+    * fold before per-batch dirs reach the hundreds; 0 (default)
+    * disables self-compaction and leaves cadence to the operator via
+    * the guarded external entry. */
   def ccMaintenanceSink(docs: DataFrame, indexPath: String, statePath: String,
                         checkpoint: String, n: Int = 3, bands: Int = 8,
                         rowsPerBand: Int = 4, compactEvery: Int = 0,

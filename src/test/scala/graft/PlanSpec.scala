@@ -633,13 +633,11 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     val dir = tempDir("ccprobe_gate")
-    graft.stream.CorpusStream.writeBatchIndex(
-      Seq((1L, 0, 11L, 1L), (2L, 1, 22L, 2L), (3L, 0, 11L, 1L))
-        .toDF("doc_id", "band", "bucket", "g0"),
-      s"$dir/batch=0", classes = 2)
+    Seq((1L, 0, 11L, 1L), (2L, 1, 22L, 2L), (3L, 0, 11L, 1L))
+      .toDF("doc_id", "band", "bucket", "g0")
+      .write.parquet(s"$dir/batch=0")
     val newBands = Seq((10L, 0, 11L), (12L, 1, 33L)).toDF("doc_id", "band", "bucket")
-    val priorIdx = graft.stream.CorpusStream.readPriorIndex(spark, dir, 1L,
-      graft.stream.CorpusStream.residueClasses(newBands))
+    val priorIdx = graft.stream.CorpusStream.readPriorIndex(spark, dir, 1L)
     val alias = Seq((2L, 1L)).toDF("dead", "live")
     val df = graft.stream.CorpusStream.ccProbeRepEdges(priorIdx, newBands, alias)
     val plan = df.queryExecution.sparkPlan
@@ -687,11 +685,13 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     assert(plan.collect { case c: CartesianProductExec => c }.isEmpty &&
       plan.collect { case b: BroadcastNestedLoopJoinExec => b }.isEmpty,
       s"pairwise stage in the probe plan:\n$plan")
-    // (6) the residue layout prunes FILES, not just rows: the index
-    // scan must carry partition filters on batch AND the residue p
-    val scanStr = parquetScans(plan).map(_.toString).mkString("\n")
-    assert(scanStr.contains("batch") && scanStr.contains("p#"),
-      s"index scan must partition-prune on (batch, p):\n$scanStr")
+    // (6) the probe prunes FILES, not just rows, to strictly earlier
+    // batches: the index scan's partition filters are on `batch` only
+    val partitionCols = plan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.partitionFilters
+    }.flatten.flatMap(_.references.map(_.name)).toSet
+    assert(partitionCols == Set("batch"),
+      s"index scan must partition-prune on batch alone, got $partitionCols:\n$plan")
     // and the probe is semantically right on the fixture: doc 10
     // shares (band 0, bucket 11) with prior docs {1, 3} whose rep is
     // doc 1 labeled g0=1; doc 12's bucket is new — no edge
