@@ -320,7 +320,7 @@ object PlanDump {
       "Good-Turing tail reads the FINAL streamed state (checkpointed " +
       "ExistingRDD — the replay harness already ran), one stacked " +
       "partial+final agg chain, nothing pairwise; the sink itself is the " +
-      "exactly-once staged-rename skeleton shared with q179/q185/q192"),
+      "complete-mode state-store aggregation shared with q179/q185/q192"),
     "q226_source_ks_drift" -> ("per-source KS drift: the corpus reduces to " +
       "checkpointed scores then (source, score) / score-class hash aggs; the " +
       "grid densification is the bounded global class table crossed with a " +

@@ -1193,6 +1193,44 @@ object StressBench {
       org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(rows)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+    // Per-batch cost of a maintained vocabulary as its state grows
+    // (vocabMaintenanceSink, the largest maintained table): `factor`
+    // micro-batches of 20,000 documents, each document carrying ten
+    // tokens never seen before, so the state gains 200,000 rows per
+    // batch. Prints each batch's wall (addData → processAllAvailable)
+    // and the Spark jobs it ran.
+    if (only.forall(_.exists("vocab_maintain".startsWith))) {
+      val dir = java.nio.file.Files.createTempDirectory("vocabmaintain").toString
+      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String](spark)
+      val q = graft.stream.CorpusStream.vocabMaintenanceSink(
+        mem.toDF().toDF("text"), s"$dir/state", s"$dir/ckpt")
+      val group = q.runId.toString
+      val jobs = scala.collection.concurrent.TrieMap.empty[Long, Int]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+            .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+            .foreach(b => jobs.synchronized(
+              jobs.update(b.toLong, jobs.getOrElse(b.toLong, 0) + 1)))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val docsPerBatch = 20000
+      val walls = try (0 until factor).map { b =>
+        val texts = (0 until docsPerBatch)
+          .map(d => (0 until 10).map(j => s"t${b}_${d}_$j").mkString(" "))
+        time { mem.addData(texts); q.processAllAvailable() }
+      } finally {
+        q.stop()
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        spark.sparkContext.removeSparkListener(listener)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      }
+      walls.zipWithIndex.foreach { case (w, b) =>
+        val rows = (b + 1L) * docsPerBatch * 10
+        println(f"STRESS vocab_maintain batch=$b%2d state_rows=$rows%,10d " +
+          f"wall=$w%6.2fs jobs=${jobs.getOrElse(b.toLong, 0)}")
+      }
+    }
     spark.stop()
   }
 }

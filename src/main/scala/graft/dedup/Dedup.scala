@@ -652,14 +652,6 @@ object Dedup {
       .filter(col("est_jaccard") >= minEstJaccard)
       .select(col("b.doc_id").as("doc_id")).distinct()
 
-  /** Public probe against a PROVIDED corpus band table (any source —
-    * in-memory, persisted, or the streaming sink's batch-partitioned
-    * layout); returns the admitted doc_ids of `incoming`. */
-  def admitAgainstBands(corpusBands: DataFrame, incoming: DataFrame, n: Int,
-                        bands: Int, rowsPerBand: Int,
-                        minEstJaccard: Double): DataFrame =
-    admitAgainst(corpusBands, incoming, n, bands, rowsPerBand, minEstJaccard)
-
   /** Public banded signature rows — the index-maintenance unit the
     * streaming admission sink appends per batch. One projection of
     * `documents`, no shuffle (see [[bandedSignatures]]): `doc_id` must

@@ -10,8 +10,9 @@ import org.apache.spark.sql.GraftBridge
 /** Native Catalyst expression computing ALL random-hyperplane LSH table
   * buckets for an `array<float>` embedding in one fused pass.
   *
-  * The HOF form ([[graft.sim.Similarity.lshBucket]]) evaluates
-  * `tables × planes` separate `zip_with`+`aggregate` folds — each
+  * The higher-order-function form (a `zip_with`+`aggregate` fold per
+  * plane, kept in the equality specs) evaluates
+  * `tables × planes` separate folds — each
   * allocating an index `sequence` and a product array per row. This
   * expression keeps one running projection per plane and visits each
   * vector element once; hyperplane components are the same

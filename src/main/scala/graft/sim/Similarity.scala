@@ -311,22 +311,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rn"))
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane, dim) —
-    * a splitmix64-style integer mix mapped to (-1, 1). Generated on the
-    * fly inside codegen; no driver-side matrix to broadcast. */
-  private def planeComponent(plane: Int, dim: Column): Column = {
-    val seed = xxhash64(lit(plane), dim)
-    (seed.cast("double") / lit(Long.MaxValue.toDouble))
-  }
-
-  /** Random-hyperplane LSH signature: `planes` sign bits packed to long. */
-  def lshBucket(e: Column, planes: Int): Column =
-    (0 until planes).map { p =>
-      val proj = aggregate(zip_with(e, sequence(lit(0), size(e) - 1),
-        (x, i) => d(x) * planeComponent(p, i)), lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(0L)
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** LSH-bucketed ANN top-k: candidates share the sign-pattern bucket on
     * at least one of `tables` independent hash tables (plane sets are
     * disjoint per table), then exact cosine re-ranking within candidates.

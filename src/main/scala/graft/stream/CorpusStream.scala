@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,6 +20,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `RocksDBStateStoreProvider` (off-heap, spillable — the in-memory
   * HDFS-backed default holds every fingerprint on-heap); StreamingSpec
   * runs this pipeline on RocksDB to prove the env supports it.
+  *
+  * The maintained tables follow one of two protocols. The eight sketch
+  * and counter sinks ([[aggMaintenanceSink]] … [[trailingQuantileSink]])
+  * are complete-mode aggregations on the same state store, each
+  * published whole by [[completeStateSink]], so Spark's checkpoint owns
+  * their exactly-once. The two band-index sinks ([[admissionSink]],
+  * [[ccMaintenanceSink]]) keep no keyed state: each batch overwrites
+  * its own `batch=<id>` partitions and probes only earlier ones.
   */
 object CorpusStream {
 
@@ -58,55 +66,39 @@ object CorpusStream {
       .start()
 
   /** Streaming materialized view: maintain a grouped aggregate STATE
-    * table under a continuous stream by algebraic merge
-    * ([[graft.ops.Incremental]]) — each micro-batch is aggregated alone
-    * and merged into the state parquet; the historical data never
-    * re-enters any plan. This is the streaming face of the q103
-    * refresh law, and the practical alternative to a stateful
-    * streaming agg when the view must live in a TABLE other engines
-    * read (complete-mode output would rewrite the whole result per
-    * batch; update-mode needs a mutable sink).
+    * table (the [[graft.ops.Incremental.aggState]] columns n, sum_v,
+    * min_v, max_v per key) under a continuous stream, as a TABLE other
+    * engines read. This is the streaming face of the q103 refresh law:
+    * the aggregation runs in complete mode on Spark's state store, so
+    * each micro-batch folds only its own rows into the per-key buffers
+    * and the historical data never re-enters any plan.
     *
-    * The overwrite stages through `<statePath>.next` + rename so a
-    * crash mid-batch leaves the previous state readable; checkpoint
-    * retry then re-merges the SAME batch — counts would double, so the
-    * batch is deduplicated against the state's high-water batch id
-    * (the [[StateMetaFile]] sidecar), keeping the merge idempotent
-    * exactly like the quarantine gate above.
-    *
-    * The high-water check is scoped to the STREAM (the checkpoint's
-    * stable query id, which survives restarts): batch ids
-    * restart at 0 under a fresh checkpoint, and an unscoped check would
-    * silently drop every early batch of the new stream as "already
-    * merged". Under a different stream id nothing is skipped — note
-    * that pointing a fresh checkpoint at an existing state table
-    * re-merges whatever the new stream reads, so recreate state and
-    * checkpoint together unless the new source starts past the data
-    * already in the state. */
+    * Exactly-once is Spark's: the state store versions the buffers
+    * with the checkpoint, and [[completeStateSink]] publishes the full
+    * result through a staged `.next` swap. A replayed batch recomputes
+    * the same table from the same state version, so no replay gate is
+    * needed. One stream owns one table: a fresh checkpoint starts from
+    * empty state and replaces the table with its own result. */
   def aggMaintenanceSink(rows: DataFrame, statePath: String, checkpoint: String,
                          keys: Seq[String], valueCol: String)
       : StreamingQuery =
-    maintainState(rows, statePath, checkpoint, "aggMaintenanceSink")(
-      graft.ops.Incremental.aggState(_, keys, valueCol))(
-      graft.ops.Incremental.mergeStates(_, _, keys))
+    completeStateSink(graft.ops.Incremental.aggState(rows, keys, valueCol),
+      statePath, checkpoint)
 
   /** Streaming HyperLogLog maintenance: keep per-source distinct-token
     * sketches ([[graft.text.HyperLogLog]] registers) current under a
-    * continuous document stream. The sketch's merge IS register-wise
-    * max, so each micro-batch contributes its own tiny register table
-    * and the union with the state collapses by `max(m)` — the
-    * mergeability that makes HLL the 100 TB distinct counter is
-    * exactly what makes it streaming-maintainable for free; the
-    * historical corpus never re-enters a plan, and the state is
-    * bounded by 256·|sources| rows no matter how long the stream runs.
-    * Same exactly-once skeleton as [[aggMaintenanceSink]] (staged
-    * rename + stream-scoped high-water batch id). State schema:
-    * (grp, idx, m). */
+    * continuous document stream. The per-source register array is the
+    * aggregation buffer the state store keeps, and its merge IS
+    * register-wise max — the mergeability that makes HLL the 100 TB
+    * distinct counter is exactly what makes it streaming-maintainable
+    * for free; the state is bounded by 256·|sources| rows no matter how
+    * long the stream runs. Same exactly-once protocol as
+    * [[aggMaintenanceSink]]. State schema: (grp, idx, m). */
   def sketchMaintenanceSink(docs: DataFrame, statePath: String, checkpoint: String)
       : StreamingQuery =
-    maintainState(docs, statePath, checkpoint, "sketchMaintenanceSink")(
-      batch => graft.text.HyperLogLog.registersOnePass(sourceTokens(batch), col("source")))(
-      unionAgg(max(col("m")).as("m"), "grp", "idx"))
+    completeStateSink(
+      graft.text.HyperLogLog.registersOnePass(sourceTokens(docs), col("source")),
+      statePath, checkpoint)
 
   /** One graded replay in flight, handed to the body of
     * [[replayGraded]]: `stream` is the replay stream a sink reads (the
@@ -156,7 +148,7 @@ object CorpusStream {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  /** [[replayGraded]] for a [[maintainState]] sink started as
+  /** [[replayGraded]] for a [[completeStateSink]] sink started as
     * `sink(stream, statePath, checkpoint)`: one lifetime over every
     * residue class, and the result is the final state table. */
   private def replayMaintained(rows: DataFrame, nBatches: Int, tag: String)(
@@ -176,7 +168,7 @@ object CorpusStream {
 
   /** GRADED end-to-end run of [[sketchMaintenanceSink]]: the documents
     * table replays through the REAL sink ([[replayGraded]] — checkpoint,
-    * staged-rename state table, high-water replay gate, all of it) and
+    * state store, staged-rename state table, all of it) and
     * the FINAL MAINTAINED STATE is then summarized with the
     * [[graft.text.HyperLogLog]] estimate tail and joined to the batch
     * exact distinct counts. Register-wise-max mergeability means the
@@ -197,7 +189,7 @@ object CorpusStream {
 
   /** Streaming maintained VOCABULARY: the exact-count twin of
     * [[sketchMaintenanceSink]] — state is the full (token, cnt) table,
-    * merged by ADDITION, so after any prefix of batches it equals the
+    * a streaming count, so after any prefix of batches it equals the
     * batch vocabulary of everything ingested (counts are additive; no
     * approximation). This is the streamed substrate of the FoF corpus
     * statistics ([[graft.text.Coverage]]): a crawl ingests
@@ -209,21 +201,22 @@ object CorpusStream {
     * sketch sinks' ≤2048-row states; that is the honest price of
     * EXACT maintained statistics, and [[sketchMaintenanceSink]] (HLL)
     * is the bounded-state alternative when approximate distinct counts
-    * suffice. Same exactly-once skeleton (staged rename + high-water).
-    * State schema: (token, cnt). */
+    * suffice. Same exactly-once protocol as [[aggMaintenanceSink]]; each
+    * batch still writes the whole vocabulary-sized table (SCALE.md,
+    * `vocab_maintain`). State schema: (token, cnt). */
   def vocabMaintenanceSink(docs: DataFrame, statePath: String, checkpoint: String)
       : StreamingQuery =
-    maintainState(docs, statePath, checkpoint, "vocabMaintenanceSink")(
-      _.select(explode(split(col("text"), " ")).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt")))(
-      unionAgg(sum(col("cnt")).as("cnt"), "token"))
+    completeStateSink(
+      docs.select(explode(split(col("text"), " ")).as("token"))
+        .groupBy(col("token")).agg(count(lit(1)).as("cnt")),
+      statePath, checkpoint)
 
   /** GRADED end-to-end run of [[vocabMaintenanceSink]] through
-    * [[replayGraded]]: the REAL sink (checkpoint, staged-rename state,
-    * high-water replay gate), then the Good–Turing row is computed off
+    * [[replayGraded]]: the REAL sink (checkpoint, state store,
+    * staged-rename state), then the Good–Turing row is computed off
     * the FINAL MAINTAINED STATE via the same
     * [[graft.text.Coverage.goodTuringFromFoF]] tail the batch query
-    * uses. Additive merge ⇒ maintained state == batch vocabulary, so
+    * uses. Additive counts ⇒ maintained state == batch vocabulary, so
     * q218's batch oracle SQL grades the streaming sink end to end (the
     * q179 trick for exact counts). */
   def maintainedVocabStats(documents: DataFrame, nBatches: Int): DataFrame =
@@ -232,55 +225,51 @@ object CorpusStream {
         vocabMaintenanceSink)))
 
   /** Streaming Count-Min maintenance: the counting twin of
-    * [[sketchMaintenanceSink]]. CMS counters are a sum sketch, so each
-    * micro-batch contributes its own ≤2048-cell sketch and the merge
-    * is counter ADDITION per (row, col) — after any prefix of batches
-    * the state equals the sketch of everything ingested so far
+    * [[sketchMaintenanceSink]]. CMS counters are a sum sketch, so the
+    * state is one streaming count per (row, col) cell over raw token
+    * occurrences ([[graft.text.CountMin.sketch]] — one aggregate, as
+    * one streaming query requires) — after any prefix of batches the
+    * state equals the sketch of everything ingested so far
     * (streamed == batch tested), and point-query estimates stay
     * one-sided. State schema: (row, col, counter). */
   def cmsMaintenanceSink(docs: DataFrame, statePath: String, checkpoint: String)
       : StreamingQuery =
-    maintainState(docs, statePath, checkpoint, "cmsMaintenanceSink")(
-      graft.text.CountMin.sketch(_))(
-      unionAgg(sum(col("counter")).as("counter"), "row", "col"))
+    completeStateSink(graft.text.CountMin.sketch(docs), statePath, checkpoint)
 
   /** Streaming Bloom maintenance: the MEMBERSHIP twin of
     * [[sketchMaintenanceSink]]/[[cmsMaintenanceSink]] — per-source
     * 4096-bit filters ([[graft.text.Bloom]]) kept current under a
-    * document stream. Bit arrays merge by word-wise OR, so after any
-    * prefix of batches the state equals the batch filter of everything
-    * ingested so far (streamed == batch tested); state is flattened to
-    * (grp, w, bits) rows — ≤64·|sources| forever — and zero words are
-    * dropped (OR of an absent word is the word). Same exactly-once
-    * skeleton. */
+    * document stream. The per-source bit array is the state-store
+    * buffer and merges by word-wise OR, so after any prefix of batches
+    * the state equals the batch filter of everything ingested so far
+    * (streamed == batch tested); the table is flattened to
+    * (grp, w, bits) rows — ≤64·|sources| forever — with zero words
+    * dropped. Same exactly-once protocol. */
   def bloomMaintenanceSink(docs: DataFrame, statePath: String, checkpoint: String)
       : StreamingQuery =
-    maintainState(docs, statePath, checkpoint, "bloomMaintenanceSink")(
-      batch => graft.text.Bloom.buildPerGroup(sourceTokens(batch), col("source"))
+    completeStateSink(
+      graft.text.Bloom.buildPerGroup(sourceTokens(docs), col("source"))
         .select(col("grp"), posexplode(col("bloom")).as(Seq("w", "bits")))
-        .filter(col("bits") =!= 0L))(
-      unionAgg(expr("bit_or(bits)").as("bits"), "grp", "w"))
+        .filter(col("bits") =!= 0L),
+      statePath, checkpoint)
 
   /** Streaming KMV maintenance: the SET-ALGEBRA twin of the other
     * sketch sinks — per-source k-minimum-values samples
     * ([[graft.text.Theta]]) kept current under a document stream.
-    * kmv(A ∪ B) = k-smallest-distinct(kmv(A) ∪ kmv(B)), so the merge
-    * is a distinct union cut back to k per group — routed through the
-    * bounded-heap [[graft.plans.TopKPerKey]], never a group sort —
-    * and after any prefix of batches the state equals the batch
-    * sketch of everything ingested so far (streamed == batch tested).
-    * State is flattened to (grp, f) rows — ≤ K·|sources| forever.
-    * Same exactly-once skeleton. */
+    * The state-store buffer is the [[graft.text.Theta.KmvAgg]] sorted
+    * distinct array of at most k values, and
+    * kmv(A ∪ B) = k-smallest-distinct(kmv(A) ∪ kmv(B)) is its merge,
+    * so after any prefix of batches the state equals the batch sketch
+    * of everything ingested so far (streamed == batch tested). The
+    * table is flattened to (grp, f) rows — ≤ K·|sources| forever.
+    * Same exactly-once protocol. */
   def kmvMaintenanceSink(docs: DataFrame, statePath: String, checkpoint: String,
                          k: Int = graft.text.Theta.K)
       : StreamingQuery =
-    maintainState(docs, statePath, checkpoint, "kmvMaintenanceSink")(
-      // a KmvAgg buffer is a sorted DISTINCT array of at most k values,
-      // so the delta is already one group's k-smallest-distinct: no cut
-      batch => graft.text.Theta.buildPerGroup(sourceTokens(batch), col("source"), k)
-        .select(col("grp"), explode(col("kmv")).as("f")))(
-      (prior, delta) => graft.plans.TopK.topKPerKey(prior.unionByName(delta).distinct(),
-        Seq("grp"), Seq(("f", true)), k).select(col("grp"), col("f")))
+    completeStateSink(
+      graft.text.Theta.buildPerGroup(sourceTokens(docs), col("source"), k)
+        .select(col("grp"), explode(col("kmv")).as("f")),
+      statePath, checkpoint)
 
   /** GRADED end-to-end run of [[kmvMaintenanceSink]] through
     * [[replayGraded]]: deterministic micro-batch replay through the
@@ -313,16 +302,15 @@ object CorpusStream {
   /** Streaming quantile-histogram maintenance — the QUANTILE member
     * completing the maintained-sketch family (HLL max-merge, CMS add,
     * Bloom OR, KMV distinct-union-cut): per-source equi-width
-    * histograms of document length kept current by counter ADDITION,
-    * the [[graft.quality.QuantileSketch.merge]] law applied per
-    * micro-batch. State is (grp, bucket, cnt) — ≤ buckets·|sources|
-    * rows forever. Same exactly-once skeleton. */
+    * histograms of document length kept current as streaming counts,
+    * the [[graft.quality.QuantileSketch.merge]] law applied by the
+    * state store. State is (grp, bucket, cnt) — ≤ buckets·|sources|
+    * rows forever. Same exactly-once protocol. */
   def quantileMaintenanceSink(docs: DataFrame, statePath: String, checkpoint: String,
                               width: Long = 16L, buckets: Int = 1024)
       : StreamingQuery =
-    maintainState(docs, statePath, checkpoint, "quantileMaintenanceSink")(
-      graft.quality.QuantileSketch.build(_, col("source"), length(col("text")), width, buckets))(
-      graft.quality.QuantileSketch.merge)
+    completeStateSink(graft.quality.QuantileSketch.build(
+      docs, col("source"), length(col("text")), width, buckets), statePath, checkpoint)
 
   /** GRADED end-to-end run of [[quantileMaintenanceSink]] through
     * [[replayGraded]]: deterministic micro-batch replay through the
@@ -351,19 +339,17 @@ object CorpusStream {
 
   /** Streaming DAY-keyed log-histogram maintenance over an event value
     * stream — the q197 trailing-window quantiles served from streamed
-    * state: per-day bit-length histograms kept current by counter
-    * ADDITION (≤ 64·|days| state rows forever, the
-    * [[graft.quality.QuantileSketch.merge]] law per micro-batch), the
-    * identical exactly-once skeleton as the other maintained sketches.
+    * state: per-day bit-length histograms kept current as streaming
+    * counts (≤ 64·|days| state rows forever), the identical
+    * exactly-once protocol as the other maintained sketches.
     * The trailing merge is a READ-side view over this state — serving
     * last-week quantiles never touches raw rows. */
   def trailingQuantileSink(events: DataFrame, statePath: String, checkpoint: String)
       : StreamingQuery =
-    maintainState(events, statePath, checkpoint, "trailingQuantileSink")(
-      graft.quality.QuantileSketch.buildLog(_,
+    completeStateSink(graft.quality.QuantileSketch.buildLog(events,
         expr("(ts div 1000) div 86400000000"),
-        expr("CAST(floor(value * 100) AS BIGINT)")))(
-      graft.quality.QuantileSketch.merge)
+        expr("CAST(floor(value * 100) AS BIGINT)")),
+      statePath, checkpoint)
 
   /** GRADED end-to-end run of [[trailingQuantileSink]] through
     * [[replayGraded]] (keyed by event_id), then the maintained
@@ -525,16 +511,16 @@ object CorpusStream {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Recovery half of the staged swap (the Layout.compact discipline)
-    * shared by the maintained state, the CC alias table and the
-    * compacted band-index base: a death between `delete(cur)` and the
-    * rename leaves the new copy stranded at `next`, so move it into
-    * place — but only when `complete(next)` holds, i.e. the marker the
-    * copy's writer puts down LAST is there. A death inside the FIRST
-    * write also leaves `next` without `cur`, holding a partial job
-    * commit or only `_temporary/`; promoting that would publish a
-    * truncated or unreadable state. RENAME-ONLY: an incomplete `next`,
-    * or one next to a live `cur`, is left alone, because whether it is
-    * a stale half-write each caller decides. */
+    * shared by the CC alias table and the compacted band-index base: a
+    * death between `delete(cur)` and the rename leaves the new copy
+    * stranded at `next`, so move it into place — but only when
+    * `complete(next)` holds, i.e. the marker the copy's writer puts
+    * down LAST is there. A death inside the FIRST write also leaves
+    * `next` without `cur`, holding a partial job commit or only
+    * `_temporary/`; promoting that would publish a truncated or
+    * unreadable table. RENAME-ONLY: an incomplete `next`, or one next
+    * to a live `cur`, is left alone, because whether it is a stale
+    * half-write each caller decides. */
   private def recoverStaged(fs: FileSystem, next: Path, cur: Path)(
       complete: Path => Boolean): Unit =
     if (!fs.exists(cur) && fs.exists(next) && complete(next))
@@ -547,113 +533,50 @@ object CorpusStream {
 
   /** Publish half of the staged swap: `next` is fully written, so
     * delete `cur` and rename `next` onto it. A crash between the two
-    * leaves only `next`, which [[recoverStaged]] repairs. */
+    * leaves only `next`: [[recoverStaged]] repairs it for the alias
+    * table and the compacted base, and [[completeStateSink]]'s replay
+    * rewrites it. */
   private def publishStaged(fs: FileSystem, next: Path, cur: Path): Unit = {
     if (fs.exists(cur)) fs.delete(cur, true)
     require(fs.rename(next, cur), s"rename failed: $next -> $cur")
   }
-
-  /** The high-water sidecar the state skeleton writes INSIDE the
-    * staged `.next` directory before the swap (underscore-prefixed, so
-    * parquet scans ignore it). Because it travels in the SAME atomic
-    * rename as the data files, it can never disagree with the state it
-    * sits next to — which is what lets the replay gate read one tiny
-    * file instead of running a full state-table scan per micro-batch
-    * (the r18 VERDICT's "2x per-batch read at vocab-sink scale" item:
-    * the gate's `agg(max(_batch_id))` job re-scanned the whole state
-    * parquet that the merge was about to scan again). */
-  private[graft] val StateMetaFile = "_graft_meta.json"
-
-  private[graft] def writeStateMeta(fs: FileSystem, dir: Path,
-                                    streamId: String, batchId: Long): Unit = {
-    val out = fs.create(new Path(dir, StateMetaFile), true)
-    try out.write(s"""{"stream_id":"$streamId","batch_id":$batchId}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** The sidecar's (stream_id, batch_id), or None when absent or
-    * unreadable. It is written last into `.next`, so None there means
-    * an incomplete write; a published state always has one. */
-  private[graft] def readStateMeta(fs: FileSystem, dir: Path): Option[(String, Long)] =
-    try {
-      val p = new Path(dir, StateMetaFile)
-      if (!fs.exists(p)) None
-      else {
-        val txt = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(fs.open(p)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val sid = """"stream_id"\s*:\s*"([^"]+)"""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        val bid = """"batch_id"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(txt).map(_.group(1).toLong)
-        for (s <- sid; b <- bid) yield (s, b)
-      }
-    } catch { case _: java.io.IOException => None }
 
   /** (source, token) rows of a documents batch, split on single
     * spaces: the token stream of the per-source sketch sinks. */
   private def sourceTokens(docs: DataFrame): DataFrame =
     docs.select(col("source"), explode(split(col("text"), " ")).as("token"))
 
-  /** A [[maintainState]] merge folding prior and delta rows per key
-    * with one aggregate (max for HLL registers, sum for counters, OR
-    * for Bloom words). */
-  private def unionAgg(agg: Column, keys: String*)(prior: DataFrame,
-                                                   delta: DataFrame): DataFrame =
-    prior.unionByName(delta).groupBy(keys.map(col): _*).agg(agg)
-
-  /** The exactly-once parquet state-table skeleton shared by the
-    * maintenance sinks: staged `.next` rename (crash leaves the prior
-    * state readable), recovery of a stranded rename, and the
-    * stream-scoped high-water gate that makes checkpoint replays
-    * idempotent. A sink is its `delta` (one micro-batch's own state
-    * rows) and its `merge` law, which folds the prior state with the
-    * delta; the first batch's state is the delta itself.
+  /** The one writer of the maintained sketch and counter tables.
+    * `state` is a streaming aggregation (plus any projection, filter or
+    * generator over its result) run in complete mode, so each
+    * micro-batch hands foreachBatch the FULL current table, computed by
+    * the state store from its previous version and the batch's rows.
+    * The writer deletes a stale or incomplete `.next`, writes the table
+    * there and swaps it in ([[publishStaged]]), so readers never see a
+    * partial write.
     *
-    * The replay gate reads the [[StateMetaFile]] sidecar (one small
-    * file): it is written into `.next` after the data and BEFORE the
-    * swap, so the atomic rename publishes data and high-water together
-    * — a crash before the rename leaves the old state AND old sidecar
-    * (replay re-merges, correct), a crash after leaves the new pair
-    * (replay is gated off, correct). The sidecar is also the `.next`
-    * completion marker [[recoverStaged]] requires, so every published
-    * state carries one, and a state without a readable sidecar fails
-    * the batch instead of being merged into a second time. */
-  private def maintainState(rows: DataFrame, statePath: String, checkpoint: String,
-                            sinkName: String)(delta: DataFrame => DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
-    val streamIdMemo = new StreamIdMemo(sinkName, checkpoint)
-    rows.writeStream
+    * Exactly-once needs no gate here: the checkpoint commit follows the
+    * swap, so a crash anywhere in this writer replays the batch, and the
+    * replay recomputes the same table from the same state version. A
+    * crash between the swap's delete and its rename leaves the table
+    * missing until that replay republishes it. One stream owns one
+    * table: a fresh checkpoint starts from empty state and replaces the
+    * table with its own result. Each batch still writes the whole
+    * table, O(|state|). */
+  private def completeStateSink(state: DataFrame, statePath: String,
+                                checkpoint: String): StreamingQuery =
+    state.writeStream
+      .outputMode("complete")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
+      .foreachBatch { (table: DataFrame, _: Long) =>
         val cur = new Path(statePath)
-        val fs = fsFor(spark, cur)
         val nxt = new Path(statePath + ".next")
-        // the query id Structured Streaming persists in the checkpoint:
-        // stable across restarts of THIS stream, different for any
-        // fresh-checkpoint run (always present inside foreachBatch,
-        // resolved once per sink start by the memo)
-        val streamId = streamIdMemo.get(spark)
-        recoverStaged(fs, nxt, cur)(readStateMeta(fs, _).isDefined)
-        if (fs.exists(nxt)) fs.delete(nxt, true) // stale or incomplete half-write
-        val curExists = fs.exists(cur)
-        val alreadyMerged = curExists && {
-          val (sid, bid) = readStateMeta(fs, cur).getOrElse(sys.error(
-            s"$sinkName: state $cur has no readable $StateMetaFile high-water sidecar"))
-          sid == streamId && bid >= batchId
-        }
-        if (!batch.isEmpty && !alreadyMerged) {
-          val d = delta(batch)
-          val merged = if (!curExists) d else merge(spark.read.parquet(statePath), d)
-          merged.write.mode("overwrite").parquet(nxt.toString)
-          writeStateMeta(fs, nxt, streamId, batchId) // last into .next: swaps atomically
-          publishStaged(fs, nxt, cur)
-        }
+        val fs = fsFor(table.sparkSession, cur)
+        if (fs.exists(nxt)) fs.delete(nxt, true)
+        table.write.parquet(nxt.toString)
+        publishStaged(fs, nxt, cur)
       }
       .start()
-  }
 
   /** [[admissionSink]]'s index layout: the [[graft.dedup.Dedup.bandRows]]
     * columns it writes flat to `indexPath/batch=<id>/`, plus the
@@ -684,9 +607,9 @@ object CorpusStream {
     * (`{"id":"<uuid>"}` in `<checkpoint>/metadata`) — stable across
     * restarts of THIS stream, different for any fresh-checkpoint run,
     * and equal to [[StreamingQuery.id]] of every (re)start on that
-    * checkpoint. None when no stream has
-    * ever started there. Shared by the sinks' high-water markers and
-    * the [[compactBandIndex]] running-sink guard. */
+    * checkpoint. None when no stream has ever started there. Shared by
+    * the band-index sinks' lock ownership ([[StreamIdMemo]]) and the
+    * [[compactBandIndex]] running-sink guard. */
   private[graft] def checkpointQueryId(spark: SparkSession,
                                        checkpoint: String): Option[String] = {
     val meta = new Path(checkpoint, "metadata")
@@ -1282,7 +1205,11 @@ object CorpusStream {
     * result; the plan gate reads it un-checkpointed. */
   private[graft] def ccProbeRepEdges(priorIdx: DataFrame, newBands: DataFrame,
                                      alias: DataFrame): DataFrame = {
-    val batchBuckets = newBands.select(col("band"), col("bucket")).distinct()
+    // no distinct: the per-bucket min ignores duplicate matches, and a
+    // shuffle on this side would make Spark's runtime-filter rule add a
+    // bloom filter of the index to it, which prunes nothing the
+    // broadcast join does not
+    val batchBuckets = newBands.select(col("band"), col("bucket"))
     val reps = priorIdx
       .join(broadcast(batchBuckets), Seq("band", "bucket"))
       .groupBy(col("band"), col("bucket"))
@@ -1450,9 +1377,9 @@ object CorpusStream {
     * invariant the relabel map preserves), so the contracted CC's
     * min-label is the true merged component minimum.
     *
-    * EXACTLY-ONCE BY IDEMPOTENCE — this sink needs no high-water
-    * marker, unlike the additive-counter sinks (whose merges are not
-    * replay-idempotent): the docs/index writes OVERWRITE their own
+    * EXACTLY-ONCE BY IDEMPOTENCE — this sink keeps no keyed state on
+    * Spark's state store (the counter sinks do, [[completeStateSink]])
+    * and needs no replay gate: the docs/index writes OVERWRITE their own
     * `batch=<id>` partition; probes read only STRICTLY EARLIER
     * partitions; and the alias recompute is deterministic AND
     * convergent — replaying a batch against the pre-swap alias

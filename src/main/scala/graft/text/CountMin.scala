@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Count-Min sketch over the corpus token-frequency stream.
@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one corpus-cardinality shuffle (the token count), then
   * depth × vocab-cardinality rows folded into ≤ depth·width = 2048
-  * cells; estimates probe by broadcast-joining the bounded sketch. At
+  * cells; estimates probe by broadcast-joining the bounded sketch
+  * ([[sketch]] alone needs no token-count shuffle). At
   * 100 TB the same plan holds with the probe set restricted to
   * heavy-hitter candidates ([[HeavyHitters.topKTokens]]); the
   * synthetic corpus' vocabulary is bounded, so the graded query probes
@@ -38,12 +39,15 @@ object CountMin {
   val Depth = 4
   val Width = 512L
 
+  /** The sketched token occurrences: tokens of 1 to 31 bytes. */
+  private def tokens(documents: DataFrame): DataFrame =
+    documents.select(explode(split(col("text"), " ")).as("token"))
+      .filter(length(col("token")) > 0 && length(col("token")) < 32)
+
   /** Exact per-token counts — the stream being sketched (and, in the
     * graded query, the probe set plus the ground truth). */
   def tokenCounts(documents: DataFrame): DataFrame =
-    documents.select(explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0 && length(col("token")) < 32)
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+    tokens(documents).groupBy(col("token")).agg(count(lit(1)).as("cnt"))
 
   /** (token, cnt, row, col) for every depth row — ONE pass over the
     * token-count stream: [[graft.functions.CmsCells]] computes the
@@ -53,14 +57,22 @@ object CountMin {
     * token's bytes once per depth. Values are bit-identical to
     * `pmod(xxhash64(token, lit(r)), Width)` (equality spec). */
   private def withCells(tokc: DataFrame): DataFrame =
-    tokc.select(col("token"), col("cnt"),
-      posexplode(graft.functions.CmsCells.cmsCells(col("token"), Depth, Width))
-        .as(Seq("row", "col")))
+    tokc.select(col("token"), col("cnt"), depthCells)
 
-  /** The sketch itself: (row, col, counter), ≤ 2048 rows. */
+  /** (row, col) of each of a `token`'s depth cells, one row per cell. */
+  private def depthCells: Column =
+    posexplode(graft.functions.CmsCells.cmsCells(col("token"), Depth, Width))
+      .as(Seq("row", "col"))
+
+  /** The sketch itself: (row, col, counter), ≤ 2048 rows, in ONE
+    * aggregate — the shape a streaming query can maintain
+    * ([[graft.stream.CorpusStream.cmsMaintenanceSink]]): each token
+    * occurrence hits its depth cells once, so a cell's count is the sum
+    * of its tokens' counts, and partial aggregation folds every
+    * partition into ≤ 2048 cells before the shuffle. */
   def sketch(documents: DataFrame): DataFrame =
-    withCells(tokenCounts(documents))
-      .groupBy(col("row"), col("col")).agg(sum(col("cnt")).as("counter"))
+    tokens(documents).select(depthCells)
+      .groupBy(col("row"), col("col")).agg(count(lit(1)).as("counter"))
 
   /** Point-query every probe token against the sketch:
     * est = min over rows of the hit cell; overcount = est − exact ≥ 0

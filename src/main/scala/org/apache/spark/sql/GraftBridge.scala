@@ -15,6 +15,12 @@ object GraftBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every event posted to the listener bus so far has
+    * reached every listener (`waitUntilEmpty` is `private[spark]`), so
+    * a harness or spec that counts events reads complete counters. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Free the block-manager storage behind a `localCheckpoint()`'d
     * DataFrame. `Dataset.unpersist` only talks to the cache manager, so
     * the MEMORY_AND_DISK blocks a local checkpoint pins are otherwise

@@ -126,7 +126,7 @@ class DBSCANSpec extends AnyFunSuite {
       spark.sparkContext.setJobGroup(group, "dbscan job count", interruptOnCancel = false)
       try body finally {
         spark.sparkContext.clearJobGroup()
-        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
         spark.sparkContext.removeSparkListener(listener)
       }
       (jobs.get, records.get)

@@ -656,8 +656,8 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     assert(restrict.nonEmpty,
       s"index scan must meet the batch buckets through a broadcast (band, bucket) join:\n$plan")
     // (2) map-only up to the join: the STREAMED (index) side has no
-    // shuffle between the file scan and the join — the build side may
-    // shuffle its batch-bounded bucket distinct before broadcasting
+    // shuffle between the file scan and the join — the build side is
+    // the batch's own (band, bucket) rows, broadcast without a distinct
     assert(restrict.forall { j =>
       val streamed = j.buildSide match {
         case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.left

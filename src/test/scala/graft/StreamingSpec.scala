@@ -352,56 +352,70 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(got.toSeq === want.toSeq)
   }
 
-  test("maintainState sidecar: a forced replay of a committed batch is gated " +
-      "off by the meta file; a state without one fails the batch loudly") {
+  test("maintained sinks: a forced replay of a committed batch leaves each " +
+      "of the eight state tables unchanged") {
+    import graft.stream.CorpusStream
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
     implicit val sctx = spark.sqlContext
-    val dir = tempDir("graft_meta_gate")
-    val state = s"$dir/state"
-    val ckpt = s"$dir/ckpt"
-    val mem = MemoryStream[(String, Long)]
-    def start() = graft.stream.CorpusStream.aggMaintenanceSink(
-      mem.toDF().toDF("k", "v"), state, ckpt, Seq("k"), "v")
-    val q1 = start()
-    try {
-      mem.addData(("a", 10L), ("b", 5L)); q1.processAllAvailable()
-      mem.addData(("a", 1L)); q1.processAllAvailable()
-    } finally q1.stop()
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val statePath = new org.apache.hadoop.fs.Path(state)
-    // the sidecar rode the atomic rename: it names THIS stream at batch 1
-    val qid = graft.stream.CorpusStream.checkpointQueryId(spark, ckpt).get
-    assert(graft.stream.CorpusStream.readStateMeta(fs, statePath)
-      === Some((qid, 1L)), "sidecar must carry (stream id, last batch id)")
-    def snapshot() = spark.read.parquet(state).orderBy("k").collect().toSeq
-    val committed = snapshot()
-    // force a crash-shaped replay: batch 1 committed its state write but
-    // (per this injection) not its checkpoint commit — the restart
-    // re-runs batch 1 and the GATE alone must keep the merge idempotent
-    def dropLastCommit(): Unit =
-      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/1"), false))
-    dropLastCommit()
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(snapshot() === committed, "sidecar gate must skip the replayed merge")
-    // same replay with the sidecar REMOVED: every published state
-    // carries one, so its absence is corruption — the batch must fail
-    // rather than guess and merge the replayed batch a second time
-    assert(fs.delete(new org.apache.hadoop.fs.Path(statePath,
-      graft.stream.CorpusStream.StateMetaFile), false))
-    dropLastCommit()
-    val q3 = start()
-    try {
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q3.processAllAvailable()
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val day = 86400000000000L // one day of nanos
+    // one row shape every sink reads its own columns from
+    val b1 = Seq((1L, "s1", "alpha beta gamma", 10L * day, 1.5),
+      (2L, "s2", "alpha delta", 11L * day, 250.0))
+    val b2 = Seq((3L, "s1", "beta epsilon alpha", 11L * day + 5L, 7.75))
+    val sinks = Seq[(String, (DataFrame, String, String) => StreamingQuery)](
+      "agg" -> (CorpusStream.aggMaintenanceSink(_, _, _, Seq("source"), "doc_id")),
+      "hll" -> (CorpusStream.sketchMaintenanceSink(_, _, _)),
+      "vocab" -> (CorpusStream.vocabMaintenanceSink(_, _, _)),
+      "cms" -> (CorpusStream.cmsMaintenanceSink(_, _, _)),
+      "bloom" -> (CorpusStream.bloomMaintenanceSink(_, _, _)),
+      "kmv" -> (CorpusStream.kmvMaintenanceSink(_, _, _)),
+      "quantile" -> (CorpusStream.quantileMaintenanceSink(_, _, _)),
+      "trailing" -> (CorpusStream.trailingQuantileSink(_, _, _)))
+    sinks.foreach { case (name, sink) =>
+      val dir = tempDir(s"graft_replay_$name")
+      val (state, ckpt) = (s"$dir/state", s"$dir/ckpt")
+      val mem = MemoryStream[(Long, String, String, Long, Double)]
+      def start() = sink(mem.toDF().toDF("doc_id", "source", "text", "ts", "value"),
+        state, ckpt)
+      def snapshot() = {
+        val t = spark.read.parquet(state)
+        t.orderBy(t.columns.map(col).toSeq: _*).collect().toSeq
       }
-      assert(e.getMessage.contains(graft.stream.CorpusStream.StateMetaFile), e.getMessage)
-    } finally q3.stop()
-    assert(snapshot() === committed, "a failed batch must leave the state untouched")
+      val q1 = start()
+      try Seq(b1, b2).foreach { b => mem.addData(b: _*); q1.processAllAvailable() }
+      finally q1.stop()
+      val committed = snapshot()
+      // batch 1 published its table but (per this injection) did not
+      // commit: the restart re-runs it from the previous state version
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/1"), false))
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      assert(CorpusStream.committedHighWater(spark, ckpt) == 1L,
+        s"$name: the replayed batch must commit again")
+      assert(snapshot() === committed, s"$name: a replayed batch must not change the state")
+    }
   }
 
-  test("maintainState staged swap: a state stranded at .next is recovered " +
-      "before the merge; a stale .next next to a live state is discarded") {
+  test("maintained state: a fresh checkpoint on an existing state table replaces it") {
+    implicit val sctx = spark.sqlContext
+    val dir = tempDir("graft_fresh_ckpt")
+    val state = s"$dir/state"
+    def counts() = spark.read.parquet(state).select("token", "cnt")
+      .as[(String, Long)].collect().toMap
+    Seq(("ckpt1", "x y"), ("ckpt2", "y z")).foreach { case (ckpt, text) =>
+      val mem = MemoryStream[String]
+      val q = graft.stream.CorpusStream.vocabMaintenanceSink(
+        mem.toDF().toDF("text"), state, s"$dir/$ckpt")
+      try { mem.addData(text); q.processAllAvailable() } finally q.stop()
+    }
+    // one stream owns one table: the second stream's state starts empty
+    assert(counts() == Map("y" -> 1L, "z" -> 1L))
+  }
+
+  test("maintained state staged swap: a stranded or stale .next is never " +
+      "published; the state equals the batch vocab") {
     implicit val sctx = spark.sqlContext
     val dir = tempDir("graft_state_swap")
     val (state, ckpt) = (s"$dir/state", s"$dir/ckpt")
@@ -420,9 +434,9 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val q2 = start()
     try { mem.addData("y z"); q2.processAllAvailable() } finally q2.stop()
     assert(!fs.exists(nxt) && counts() == Map("x" -> 1L, "y" -> 2L, "z" -> 1L),
-      "the stranded state must be recovered and merged into")
+      "the next batch must publish the full table from the state store")
     // death mid-write of .next: a half-write next to the live state. An
-    // empty batch writes nothing, so only the discard removes it
+    // empty batch republishes the full table, replacing it
     Seq(("bogus", 99L)).toDF("token", "cnt").write.parquet(nxt.toString)
     val q3 = start()
     try { mem.addData(Seq.empty[String]); q3.processAllAvailable() } finally q3.stop()
@@ -432,14 +446,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "a stale .next must be discarded, never published")
   }
 
-  test("maintainState: a crash inside the FIRST write (.next holds only " +
+  test("maintained state: a crash inside the FIRST write (.next holds only " +
       "_temporary/) is discarded, not promoted into an unreadable state") {
     implicit val sctx = spark.sqlContext
     val dir = tempDir("graft_state_first_crash")
     val (state, ckpt) = (s"$dir/state", s"$dir/ckpt")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val nxt = new org.apache.hadoop.fs.Path(s"$state.next")
-    // what a job dying before its commit leaves: no state, no sidecar
+    // what a job dying before its commit leaves: no state, no _SUCCESS
     assert(fs.mkdirs(new org.apache.hadoop.fs.Path(nxt, "_temporary/0")))
     val mem = MemoryStream[String]
     val q = graft.stream.CorpusStream.vocabMaintenanceSink(mem.toDF().toDF("text"), state, ckpt)
@@ -475,6 +489,44 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(got == want, s"maintained groups must equal batch CC:\n got=$got\nwant=$want")
     assert(got.toMap.apply(5L) == 3L, "fixture: the relabel must have written the alias")
     assert(!fs.exists(aliasNext), "the alias write must replace the incomplete alias.next")
+  }
+
+  test("ccMaintenanceSink: no plan of a probing micro-batch carries a " +
+      "runtime bloom filter") {
+    // the broadcast (band, bucket) join already restricts the index scan;
+    // a bloom filter of the index over the batch side prunes nothing and
+    // ships megabytes of filter bits in every task binary
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    implicit val sctx = spark.sqlContext
+    val dir = tempDir("graft_cc_no_rtf")
+    val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val dB = "one two three four five six seven eight nine ten"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val mem = MemoryStream[(Long, String)]
+    val q = graft.stream.CorpusStream.ccMaintenanceSink(
+      mem.toDF().toDF("doc_id", "text"), s"$dir/idx", s"$dir/state", s"$dir/ckpt", 3, 8, 4)
+    try Seq(Seq((5L, dA), (8L, dB)), Seq((3L, dA.replace("kappa", "lambda")), (9L, dB)))
+      .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+    finally {
+      q.stop()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    assert(all.exists(_.contains("g0")), "fixture: the probe plans must be seen")
+    val filtered = all.filter(p => p.contains("might_contain") || p.contains("bloom_filter_agg"))
+    assert(filtered.isEmpty, s"a runtime bloom filter entered the sink:\n${filtered.take(1).mkString}")
   }
 
   /** Sequential reference for the admission sink: each batch admitted
@@ -603,7 +655,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       prev = fresh
     } finally {
       q.stop()
-      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
     assert((0L until nBatches.toLong).forall(jobs.contains),
@@ -1602,7 +1654,12 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     try { seen ++= b2; mem.addData(b2: _*); q2.processAllAvailable() } finally q2.stop()
     val got = spark.read.parquet(state).select("row", "col", "counter").collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val want = graft.text.CountMin.sketch(seen.toSeq.toDF("doc_id", "text")).collect()
+    // the sum of per-token counts over each token's depth cells
+    import graft.text.CountMin
+    val want = CountMin.tokenCounts(seen.toSeq.toDF("doc_id", "text"))
+      .select(col("cnt"), posexplode(graft.functions.CmsCells.cmsCells(
+        col("token"), CountMin.Depth, CountMin.Width)).as(Seq("row", "col")))
+      .groupBy(col("row"), col("col")).agg(sum(col("cnt"))).collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == want, "streamed counter table must equal the batch sketch")
     // total mass = total token count, per row
