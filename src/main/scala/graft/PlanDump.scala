@@ -189,19 +189,19 @@ object PlanDump {
       "aggregation, so the index scan stays map-only and only matched postings " +
       "shuffle — is gated structurally in PlanSpec on ccProbeRepEdges, the " +
       "exact DataFrame the sink checkpoints"),
-    "q232_cc_compact_resume" -> ("the q231 replay with the band index " +
-      "COMPACTED mid-stream (sink stopped, checkpoint-derived bound, same " +
-      "stream resumed): the graded tail is the identical resolved " +
+    "q232_cc_compact_resume" -> ("the q231 replay through a self-folding " +
+      "sink (compactEvery=1) that STOPS after the fold inside batch 1 and " +
+      "resumes the same stream: the graded tail is the identical resolved " +
       "(doc_id, group_id) state (Scan ExistingRDD after localCheckpoint), " +
-      "because compaction only re-homes batch partitions into the flat " +
-      "batch=-1 base, which every later probe's batch < id filter reads, " +
+      "because the fold only re-homes batch partitions into the flat " +
+      "batch=-1 base, which the resumed probe's batch < id filter reads, " +
       "and the equality law (resolved state == batch CC) survives the fold"),
     "q233_cc_autocompact" -> ("the q231 replay with the sink folding its " +
       "OWN band index inside foreachBatch (compactEvery=1, the " +
       "pending-dir-count trigger): the graded tail is the identical " +
       "resolved (doc_id, group_id) state (Scan ExistingRDD after " +
       "localCheckpoint) — the fold is serialized with commits and probes " +
-      "by Structured Streaming itself (no external compaction step), " +
+      "by Structured Streaming itself, " +
       "batch 2's probe reads a base the sink created mid-stream, and the " +
       "preservation law keeps resolution equal to batch CC"),
     "q200_bpe_train" -> ("BPE training touches the corpus ONCE (word-frequency " +

@@ -293,11 +293,12 @@ object SparkEntry {
       graft.stream.CorpusStream.maintainedCcGroups(
         Tables.documents(s, d), AdmissionBatches)),
     // the CC sink's full state LIFECYCLE graded end to end: replay 2
-    // batches through the REAL sink, STOP it, compact the band index
-    // under the checkpoint-derived bound, RESUME the same stream for
-    // the last batch against the compacted base — compaction preserves
-    // exactly what probes read, so the resolved state still equals
-    // batch CC and q231's oracle grades the compact+resume path
+    // batches through the REAL self-folding sink (compactEvery=1, the
+    // fold inside batch 1), STOP it, RESUME the same stream for the
+    // last batch, which probes the folded base and folds again — the
+    // fold preserves exactly what probes read, so the resolved state
+    // still equals batch CC and q231's oracle grades the stop+resume
+    // path across a folded index
     "q232_cc_compact_resume" -> ((s, d) =>
       graft.stream.CorpusStream.maintainedCcGroupsCompacted(
         Tables.documents(s, d), AdmissionBatches, 2)),
@@ -2517,7 +2518,7 @@ object SparkEntry {
          |SELECT a AS doc_id, MIN(b) AS group_id,
          |  a % $AdmissionBatches AS batch
          |FROM r GROUP BY a ORDER BY doc_id""".stripMargin,
-    // compaction + resume preserve the sink's equality law (probes read
+    // the fold and the resume preserve the sink's equality law (probes read
     // the same rows from the folded base), so q232 grades against the
     // IDENTICAL chain — any compaction-induced divergence (lost band
     // rows, a probe seeing its own batch, a broken alias) would break

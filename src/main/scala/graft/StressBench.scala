@@ -1109,14 +1109,13 @@ object StressBench {
       stageSplit(docsN, s"${factor}x", 3)
     }
     // q232 phase attribution at the GRADED scale (VERDICT r15 item 3):
-    // the heaviest graded query is the compact+resume lifecycle, whose
-    // decomposition was previously quoted from sf0.01. Drive the EXACT
-    // graded body (the timer-taking maintainedCcGroupsCompacted seam —
-    // no measurement fork) with q232's own parameters (nBatches=3,
-    // compactAfter=2) on the sf tables, splitting its wall into
-    // lifecycle1 (2-batch checkpointed stream, start→stop) / compact
-    // (the checkpoint-bounded fold) / lifecycle2 (resume + final batch)
-    // / resolve (state read + alias hop + collect). Run with
+    // drive the EXACT graded body (the timer-taking
+    // maintainedCcGroupsCompacted seam — no measurement fork) with
+    // q232's own parameters (nBatches=3, compactAfter=2) on the sf
+    // tables, splitting its wall into lifecycle1 (2-batch self-folding
+    // stream, start→stop, the fold inside batch 1) / lifecycle2 (resume
+    // + final batch, which folds again) / resolve (state read + alias
+    // hop + collect). Run with
     // SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 for the graded scale;
     // the factor× row shows how each phase scales past it.
     if (only.forall(_.exists("cc_compact_stages".startsWith))) {

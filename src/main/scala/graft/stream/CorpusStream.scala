@@ -421,31 +421,27 @@ object CorpusStream {
     }
 
   /** GRADED end-to-end run of the CC sink's full state LIFECYCLE —
-    * [[maintainedCcGroups]] with [[compactBandIndex]] exercised
-    * mid-stream: the first `compactAfter` residue-class batches replay
-    * through the REAL checkpointed sink, the sink STOPS, the band
-    * index compacts under the checkpoint-derived bound
-    * (committed high water + 1 — the safe-by-default overload), the
-    * SAME stream resumes from its checkpoint, and the remaining
-    * batches replay against the compacted base. Compaction preserves
-    * exactly the rows probes read (`batch < id` includes the base's
-    * -1 for every real batch id), so the resolved final state still
-    * equals batch CC over the whole corpus — q231's oracle (q57's
-    * recursive-CTE chain + the residue-class batch column) grades the
-    * compaction + resume path end to end, promoting the
-    * StreamingSpec-only equality claim into the driver's correctness
-    * gate (the q179/q198 discipline applied to the last ungraded
-    * maintained-state transition). */
+    * [[maintainedCcGroups]] with a stop and a resume across a folded
+    * index: one self-compacting sink (`compactEvery = 1`) replays the
+    * first `compactAfter` residue-class batches, folding its own band
+    * index inside them, and STOPS; the SAME stream then resumes from
+    * its checkpoint over the remaining batches, whose first batch
+    * probes the base the stream folded before it stopped and then folds
+    * again. The fold preserves exactly the rows probes read
+    * (`batch < id` includes the base's -1 for every real batch id), so
+    * the resolved final state still equals batch CC over the whole
+    * corpus — q231's oracle (q57's recursive-CTE chain + the
+    * residue-class batch column) grades the stop + resume path across
+    * a folded index end to end. */
   def maintainedCcGroupsCompacted(documents: DataFrame, nBatches: Int,
                                   compactAfter: Int): DataFrame =
     maintainedCcGroupsCompacted(documents, nBatches, compactAfter, CcNoTimer)
 
   /** Timer-taking seam (the [[CcStageTimer]] discipline): StressBench's
     * `cc_compact_stages` drives THIS body — the exact one q232 grades —
-    * to decompose its cost into lifecycle1 / compact / lifecycle2 /
-    * resolve at the graded scale, instead of quoting sf0.01 numbers.
-    * Each lifecycle is one [[GradedReplay.run]] over its own range of
-    * residue classes. */
+    * to decompose its cost into lifecycle1 / lifecycle2 / resolve at
+    * the graded scale. Each lifecycle is one [[GradedReplay.run]] over
+    * its own range of residue classes, its folds included. */
   private[graft] def maintainedCcGroupsCompacted(documents: DataFrame, nBatches: Int,
                                                  compactAfter: Int,
                                                  t: CcStageTimer): DataFrame = {
@@ -453,17 +449,18 @@ object CorpusStream {
       s"compactAfter must split the replay: got $compactAfter of $nBatches")
     val spark = documents.sparkSession
     replayGraded(documents.select(col("doc_id"), col("text")), nBatches, "ccc", t) { r =>
-      def start() = ccMaintenanceSink(r.stream, r("idx"), r("state"), r("ckpt"))
+      def start() = ccMaintenanceSink(r.stream, r("idx"), r("state"), r("ckpt"),
+        compactEvery = 1)
       t("lifecycle1")(r.run(start(), 0 until compactAfter))
-      // determinism insurance (VERDICT r15): compactAfter counts residue
-      // CLASSES — if every one of the first compactAfter classes were
-      // empty, zero batches would have committed and the "compact" leg
-      // would grade a no-op fold. Fail loudly instead of grading it.
-      require(committedHighWater(spark, r("ckpt")) >= 0L,
-        s"maintainedCcGroupsCompacted: no batch committed before the fold " +
-          s"(the first $compactAfter residue classes of $nBatches were all " +
-          "empty) — this fixture cannot grade compaction")
-      t("compact")(compactBandIndex(spark, r("idx"), r("ckpt"))) // sink stopped: the contract
+      // determinism insurance: compactAfter counts residue CLASSES — if
+      // fewer than two of them held documents, the stream stopped
+      // before any fold and the resume would read no folded base. Fail
+      // loudly instead of grading q231 again.
+      val base = new Path(r("idx"), "batch=-1")
+      require(fsFor(spark, base).exists(base),
+        "maintainedCcGroupsCompacted: the sink folded nothing before it " +
+          s"stopped (the first $compactAfter residue classes of $nBatches " +
+          "held fewer than two batches) — this fixture cannot grade the resume")
       // resume the SAME stream from its checkpoint
       t("lifecycle2")(r.run(start(), compactAfter until nBatches))
       resolveCcState(spark, r("state"), nBatches)
@@ -476,13 +473,12 @@ object CorpusStream {
     * band index INSIDE foreachBatch every `compactEvery`-th batch, so
     * later batches' probes read the self-folded base mid-stream (with
     * nBatches=3, compactEvery=1 the fold fires inside batches 1 and 2,
-    * and batch 2's probe reads a base the SINK created — no external
-    * compaction step at all). The in-batch fold preserves exactly the
-    * rows probes read, so the resolved final state still equals batch
-    * CC over the whole corpus and q231's oracle grades the
-    * self-compaction path end to end — promoting the `compactEvery`
-    * StreamingSpec claim into the driver's correctness gate, the same
-    * discipline that promoted stop→compact→resume as q232. The
+    * and batch 2's probe reads a base the SINK created). The in-batch
+    * fold preserves exactly the rows probes read, so the resolved final
+    * state still equals batch CC over the whole corpus and q231's
+    * oracle grades the self-compaction path end to end — promoting the
+    * `compactEvery` StreamingSpec claim into the driver's correctness
+    * gate; q232 grades the same fold across a stop and a resume. The
     * harness REQUIRES the fold actually engaged (a base exists when
     * the stream stops), so a silently-disabled knob fails loudly
     * instead of grading q231 twice. */
@@ -603,55 +599,12 @@ object CorpusStream {
     schema.fold(spark.read)(spark.read.schema).parquet(indexPath)
       .filter(col("batch") < batchId)
 
-  /** The query id Structured Streaming persists in the checkpoint
-    * (`{"id":"<uuid>"}` in `<checkpoint>/metadata`) — stable across
-    * restarts of THIS stream, different for any fresh-checkpoint run,
-    * and equal to [[StreamingQuery.id]] of every (re)start on that
-    * checkpoint. None when no stream has ever started there. Shared by
-    * the band-index sinks' lock ownership ([[StreamIdMemo]]) and the
-    * [[compactBandIndex]] running-sink guard. */
-  private[graft] def checkpointQueryId(spark: SparkSession,
-                                       checkpoint: String): Option[String] = {
-    val meta = new Path(checkpoint, "metadata")
-    val fs = fsFor(spark, meta)
-    if (!fs.exists(meta)) None
-    else {
-      val txt = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(fs.open(meta)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    }
-  }
-
-  /** Per-sink memo of [[checkpointQueryId]]: the id is constant for
-    * the life of a checkpoint, but each sink used to re-read and
-    * re-parse `<checkpoint>/metadata` on EVERY micro-batch — thousands
-    * of redundant small-file reads over a long trickle stream's
-    * lifetime, purely to recompute the same UUID. One instance is
-    * created per sink construction (outside foreachBatch) and resolves
-    * on the first non-empty batch, when Structured Streaming has
-    * necessarily written the metadata file; a sink restart constructs
-    * a fresh memo, which re-reads the same stable id. */
-  private[graft] final class StreamIdMemo(sinkName: String, checkpoint: String) {
-    private val ref = new java.util.concurrent.atomic.AtomicReference[String]
-    def get(spark: SparkSession): String = {
-      val cached = ref.get
-      if (cached != null) cached
-      else {
-        val v = checkpointQueryId(spark, checkpoint).getOrElse(
-          sys.error(s"$sinkName: no query id in $checkpoint/metadata"))
-        ref.compareAndSet(null, v)
-        ref.get
-      }
-    }
-  }
-
   /** The checkpoint's committed high-water batch id — the max entry in
     * `<checkpoint>/commits` (Structured Streaming writes one file per
-    * COMMITTED batch), or -1 when nothing has committed. This is the
-    * value that makes compaction safe: a restarted stream replays at
-    * most the first UNcommitted batch, whose probe reads strictly
-    * below itself — all inside a base folded up to highWater + 1. */
+    * COMMITTED batch), or -1 when nothing has committed. A restarted
+    * stream replays at most the first UNcommitted batch, whose probe
+    * reads strictly below itself — all inside a base folded up to
+    * highWater + 1, the bound [[compactBandIndex]] takes. */
   def committedHighWater(spark: SparkSession, checkpoint: String): Long = {
     val commits = new Path(s"$checkpoint/commits")
     val fs = fsFor(spark, commits)
@@ -661,104 +614,21 @@ object CorpusStream {
       .foldLeft(-1L)(math.max)
   }
 
-  /** OFFLINE compaction for the maintained band indexes: folds every
-    * `batch < uptoBatch` partition (and any existing compacted base)
-    * into ONE flat base at `batch=-1`, then removes the consumed
-    * per-batch dirs. Probes are untouched — their `batch < batchId`
-    * filter includes -1 for every real batch id — and compaction
-    * bounds the per-probe file LISTING, which otherwise grows with
-    * total batch count for the life of the stream.
-    *
-    * CONTRACT: run while the sink is STOPPED, with `uptoBatch` no
-    * greater than the checkpoint's committed high water + 1 — a
-    * replayed batch only ever re-reads batches strictly below itself,
-    * all of which are then inside the base. This entry DERIVES exactly
-    * that bound from the sink's own checkpoint ([[committedHighWater]]
-    * + 1), which removes the one manual step from the contract.
-    *
-    * REFUSES (IllegalArgumentException) while a streaming query is
-    * ACTIVE on `checkpoint` in this SparkSession: a batch committing
-    * between the high-water read and the fold would put its index rows
-    * inside the base where its own replay's probe (`batch < batchId`,
-    * which includes -1) would see them, and the post-swap per-batch dir
-    * deletes would race that query's probes. The check matches the
-    * checkpoint's persisted query id (stable across restarts) against
-    * `spark.streams.active`, so it holds for any restart of the sink,
-    * not just the original handle. A sink that self-compacts
-    * ([[ccMaintenanceSink]]'s `compactEvery`) never hits this guard:
-    * its fold runs INSIDE foreachBatch, serialized with commits and
-    * probes by Structured Streaming itself.
-    *
-    * Crash-safe by the staged dot-dir discipline plus probe idempotence:
-    *  - the new base writes to `.compact_next` (dot-prefixed —
-    *    invisible to partition discovery), so a crash mid-write
-    *    changes nothing;
-    *  - a crash between deleting the old base and renaming the new one
-    *    is recovered at the NEXT invocation (stranded `.compact_next`
-    *    with its `_SUCCESS` and no `batch=-1`);
-    *  - consumed per-batch dirs are deleted only AFTER the swap; a
-    *    crash mid-delete leaves rows duplicated between the base and
-    *    surviving dirs, which both probes tolerate by construction
-    *    (admission takes DISTINCT rejected ids; the CC probe takes a
-    *    per-bucket MIN and distinct edges), and the next compaction
-    *    REMOVES them — the fold input is de-duplicated (crash copies
-    *    are exact-row duplicates), so the base cannot inflate across
-    *    crash cycles.
-    *
-    * Cross-process serialization: the fold holds `.compact_lock`
-    * (owner-tokened, see [[checkCompactLock]]) for its whole run.
-    * Queries started from a DIFFERENT SparkSession or application are
-    * invisible to the active-query check above, but a sink (re)started
-    * anywhere DURING the fold refuses loudly at its probe instead of
-    * racing the post-swap per-batch dir deletes, a second compactor
-    * refuses instead of interleaving, and a lock left by a crashed
-    * compactor goes stale after [[CompactLockStaleMs]] so it cannot
-    * wedge the pipeline: the cross-application story is a lock
-    * protocol, not operator vigilance. */
-  def compactBandIndex(spark: SparkSession,
-                       indexPath: String, checkpoint: String): Unit =
-    compactBandIndex(spark, indexPath, checkpoint, CompactLockStaleMs)
-
-  /** [[compactBandIndex]] (checkpoint-deriving) with an explicit
-    * staleness bound — an EXPLICIT overload rather than a default
-    * because only one overload set may carry defaults (the
-    * bound-taking one does). */
-  def compactBandIndex(spark: SparkSession,
-                       indexPath: String, checkpoint: String,
-                       lockStaleMs: Long): Unit = {
-    checkpointQueryId(spark, checkpoint).foreach { qid =>
-      require(!spark.streams.active.exists(_.id.toString == qid),
-        s"compactBandIndex: streaming query $qid is ACTIVE on checkpoint " +
-          s"$checkpoint — stop the sink before compacting (its commits race " +
-          "the high-water bound and its probes race the per-batch dir deletes)")
-    }
-    compactBandIndex(spark, indexPath,
-      committedHighWater(spark, checkpoint) + 1L, lockStaleMs = lockStaleMs)
-  }
-
-  /** Recovery of a compaction interrupted between `delete(base)` and
-    * the rename: the folded base is stranded at `.compact_next`
-    * (invisible to partition discovery), so until recovered every probe
-    * would silently miss the folded history and reach DIFFERENT
+  /** Recovery of a fold interrupted between `delete(base)` and the
+    * rename: the folded base is stranded at `.compact_next` (invisible
+    * to partition discovery), so until recovered every probe would
+    * silently miss the folded history and reach DIFFERENT
     * admission/merge decisions. Called at the head of
     * [[compactBandIndex]] AND before every sink probe
-    * ([[probePriorIndex]]), so the window closes at
-    * the next batch even if no compaction is ever re-invoked.
+    * ([[probePriorIndex]]), so the window closes at the next batch
+    * even if no fold ever fires again.
     *
-    * RENAME-ONLY by design: a `.compact_next` sitting next to a live
-    * base is either a crashed half-write (harmless — invisible to
-    * scans, cleaned by the next compaction) or a compaction IN FLIGHT
-    * between finishing its write and deleting the base. The probe path
-    * cannot distinguish them, and deleting here would let a sink that
-    * (re)started during an external fold — already a contract
-    * violation, but a survivable one — destroy the new base moments
-    * before the compactor's swap, turning a racy read into permanent
-    * loss of all previously-folded history. Deleting the stale case is
-    * [[compactBandIndex]]'s job, which IS serialized with other
-    * compactions by the maintenance contract. A `.compact_next`
-    * without its `_SUCCESS` (the first fold crashed or is still
-    * writing) is not promoted: the per-batch dirs it folds are deleted
-    * only after a swap, so probes still read all of them. */
+    * RENAME-ONLY: a `.compact_next` next to a live base is a fold that
+    * crashed during its write. Scans cannot see it, and the next fold
+    * deletes it before writing its own. A `.compact_next` without its
+    * `_SUCCESS` (the first fold crashed mid-write) is not promoted: the
+    * per-batch dirs it folds are deleted only after a swap, so probes
+    * still read all of them. */
   private[graft] def recoverCompactedBase(
       spark: SparkSession, indexPath: String): Unit = {
     val base = new Path(s"$indexPath/batch=-1")
@@ -766,245 +636,64 @@ object CorpusStream {
     recoverStaged(fs, new Path(s"$indexPath/.compact_next"), base)(jobCommitted(fs))
   }
 
-  /** Default staleness bound for `.compact_lock`: a lock whose mtime
-    * is older than this is attributed to a CRASHED compactor, so
-    * probes proceed past it and the next [[compactBandIndex]]
-    * supersedes it — a dead process cannot wedge the sink forever.
-    * Staleness is driven by LIVENESS, not elapsed fold time: the fold
-    * heartbeats the lock's mtime every `lockStaleMs / 3`
-    * ([[lockHeartbeat]]), so a legitimate fold running past the bound
-    * (a 100 TB fold is tens of minutes) stays fresh as long as its
-    * process is alive — the bound is the crash-DETECTION latency, not
-    * a fold-duration ceiling. Every lock-touching entry point takes a
-    * `lockStaleMs` knob with this default; tune it DOWN for faster
-    * crash recovery on small indexes, UP only when the filesystem's
-    * mtime granularity or cross-host clock skew vs the namenode
-    * approaches the bound (skew shifts the effective bound in either
-    * direction — keep it an order of magnitude above expected skew).
-    * SCALE.md ties the choice to measured fold cost. */
-  private[graft] val CompactLockStaleMs: Long = 30L * 60L * 1000L
-
-  private[graft] def compactLockPath(indexPath: String): Path =
-    new Path(s"$indexPath/.compact_lock")
-
-  private[graft] def readLockOwner(fs: FileSystem, lock: Path): String =
-    try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(fs.open(lock)),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    catch { case _: java.io.IOException => "" }
-
-  /** Probe-side half of the `.compact_lock` protocol, closing the one
-    * race the same-session running-sink guard cannot see: a sink
-    * (re)started while an EXTERNAL [[compactBandIndex]] is mid-fold —
-    * possibly from another application — would otherwise scan
-    * per-batch dirs the compactor is about to delete post-swap.
-    * Called before every probe's [[recoverCompactedBase]]:
-    *  - no lock → proceed;
-    *  - lock owned by THIS stream (`selfOwner`, the checkpoint's
-    *    persisted query id) → a crashed in-stream self-fold: the
-    *    sink's own folds run inside its foreachBatch, serialized with
-    *    this probe, so no live compactor can hold it — delete it and
-    *    let [[recoverCompactedBase]] repair whatever the crash left;
-    *  - fresh foreign lock → an in-flight fold: REFUSE loudly (the
-    *    streaming query fails; restart it after the fold) rather than
-    *    read a layout mid-swap — also why this runs BEFORE
-    *    recoverCompactedBase, whose rename would otherwise race the
-    *    compactor's own swap;
-    *  - stale foreign lock → a crashed compactor: proceed (the
-    *    recovery rename repairs the layout); the lock itself is
-    *    cleaned by the next compaction, which owns lock lifecycle.
+  /** The band-index FOLD: folds every `batch < uptoBatch` partition
+    * (and any existing compacted base) into ONE flat base at
+    * `batch=-1`, then removes the consumed per-batch dirs. Probes are
+    * untouched — their `batch < batchId` filter includes -1 for every
+    * real batch id — and the fold bounds the per-probe file LISTING,
+    * which otherwise grows with total batch count for the life of the
+    * stream.
     *
-    * Honest bound: this check is itself check-then-act — a fold
-    * STARTING while this probe's scan is already in flight is not
-    * excluded (that would need a reader/writer lock a plain
-    * filesystem cannot give atomically). The lock converts the
-    * common operational race (sink restarted during a fold) into a
-    * loud refusal; the residual window is one probe-scan overlapping
-    * a fold-start, whose destructive arm is already closed
-    * ([[recoverCompactedBase]] is rename-only) and whose read arm
-    * fails LOUDLY (a dir deleted mid-scan raises, ignoreMissingFiles
-    * stays default-false) — the failed batch replays against the
-    * folded base, which preserves every row it needs. */
-  private[graft] def checkCompactLock(spark: SparkSession,
-                                      indexPath: String,
-                                      selfOwner: Option[String],
-                                      lockStaleMs: Long = CompactLockStaleMs)
-      : Unit = {
-    val lock = compactLockPath(indexPath)
-    val fs = fsFor(spark, lock)
-    val st = try {
-      if (fs.exists(lock)) Some(fs.getFileStatus(lock)) else None
-    } catch { case _: java.io.FileNotFoundException => None }
-    st.foreach { s =>
-      val owner = readLockOwner(fs, lock)
-      if (selfOwner.contains(owner)) fs.delete(lock, true)
-      // empty owner + lock GONE on re-check = a fold finished (released)
-      // between the stat and the owner read — nothing is in flight,
-      // proceed; empty owner + lock still present = a fold is mid-
-      // acquisition (created, owner not yet written) — fall through to
-      // the freshness refusal like any live lock
-      else if (owner.isEmpty && !fs.exists(lock)) ()
-      else if (System.currentTimeMillis() - s.getModificationTime < lockStaleMs)
-        throw new IllegalStateException(
-          s"band-index probe: a compaction is IN FLIGHT on $indexPath " +
-            s"(.compact_lock held by $owner) — its post-swap dir deletes " +
-            "would race this probe's scan; wait for the fold to finish " +
-            "(the lock goes stale after " +
-            s"${lockStaleMs / 60000} min if its process died — the fold " +
-            "heartbeats it while alive), then restart the sink")
-    }
-  }
-
-  /** Bound-taking overload, narrowed to the package: an `uptoBatch`
-    * above the checkpoint's committed high water + 1 would fold an
+    * CONTRACT: the index's own sink is the only caller
+    * ([[bandIndexSink]]'s `compactEvery`). It folds inside foreachBatch
+    * with `uptoBatch = batchId`, so Structured Streaming serializes the
+    * fold with the sink's commits and probes, and the bound is exactly
+    * the committed high water + 1. A higher bound would fold an
     * UNCOMMITTED batch's index rows into the base, where its own
     * replay's probe (`batch < batchId`, which includes -1) would see
-    * them — every replayed doc self-collides at est_jaccard=1 and
-    * admission decisions flip versus the original run (ADVICE r14).
-    * External callers get only the checkpoint-deriving overload, which
-    * computes exactly the safe bound. */
+    * them: every replayed doc self-collides at est_jaccard=1 and the
+    * decisions flip versus the original run.
+    *
+    * Crash-safe by the staged dot-dir discipline plus probe idempotence:
+    *  - the new base writes to `.compact_next` (dot-prefixed —
+    *    invisible to partition discovery), so a crash mid-write
+    *    changes nothing;
+    *  - a crash between deleting the old base and renaming the new one
+    *    is recovered by the next probe or fold (stranded
+    *    `.compact_next` with its `_SUCCESS` and no `batch=-1`);
+    *  - consumed per-batch dirs are deleted only AFTER the swap; a
+    *    crash mid-delete leaves rows duplicated between the base and
+    *    surviving dirs, which both probes tolerate by construction
+    *    (admission takes DISTINCT rejected ids; the CC probe takes a
+    *    per-bucket MIN and distinct edges), and the next fold REMOVES
+    *    them — the fold input is de-duplicated (crash copies are
+    *    exact-row duplicates), so the base cannot inflate across crash
+    *    cycles. */
   private[graft] def compactBandIndex(spark: SparkSession,
-                                      indexPath: String, uptoBatch: Long,
-                                      owner: String =
-                                        s"external:${java.util.UUID.randomUUID}",
-                                      lockStaleMs: Long = CompactLockStaleMs)
-      : Unit = {
+                                      indexPath: String, uptoBatch: Long): Unit = {
     val root = new Path(indexPath)
     val fs = fsFor(spark, root)
     val base = new Path(s"$indexPath/batch=-1")
     val next = new Path(s"$indexPath/.compact_next")
     if (!fs.exists(root)) return
-    // lock entry: refuse a FRESH foreign lock (a live fold — folds are
-    // serialized, interleaving two swaps corrupts the base); an own or
-    // stale lock is a crash remnant this invocation supersedes. The
-    // supersede is an ATOMIC RENAME to a unique tombstone, not a
-    // delete: a delete is check-then-act — two compactors that both
-    // stat the same stale lock could interleave so the second delete
-    // removes the first's freshly created LIVE lock (ADVICE r17). With
-    // rename, only one renamer wins the stale file (the loser's rename
-    // fails and it falls through to the create, which arbitrates); the
-    // winner then INSPECTS what it actually caught — if the path
-    // swapped under it (a concurrent superseder already re-created a
-    // fresh lock at this path between our stat and our rename), the
-    // tombstone holds a DIFFERENT owner with a fresh mtime: restore it
-    // and refuse. The create uses overwrite=false, so two compactors
-    // that both pass the held-lock check cannot both acquire on any
-    // FileSystem whose create-if-absent is atomic (HDFS; the local
-    // FS's exists+create leaves a hair of a window, which the
-    // post-write owner re-read below closes for the fold arm).
-    val lock = compactLockPath(indexPath)
-    val held = try {
-      if (fs.exists(lock)) Some(fs.getFileStatus(lock)) else None
-    } catch { case _: java.io.FileNotFoundException => None }
-    held.foreach { s =>
-      val by = readLockOwner(fs, lock)
-      require(by == owner ||
-        System.currentTimeMillis() - s.getModificationTime >= lockStaleMs,
-        s"compactBandIndex: another compaction holds $lock (owner $by) — " +
-          "folds must be serialized; if its process is dead the lock goes " +
-          s"stale after ${lockStaleMs / 60000} min (live folds heartbeat it)")
-      val tomb = new Path(
-        s"$indexPath/.compact_lock.tomb.${java.util.UUID.randomUUID}")
-      if (fs.rename(lock, tomb)) {
-        val caught = try Some(fs.getFileStatus(tomb)) catch {
-          case _: java.io.FileNotFoundException => None }
-        val grabbedLive = caught.exists { c =>
-          readLockOwner(fs, tomb) != by &&
-            System.currentTimeMillis() - c.getModificationTime < lockStaleMs }
-        if (grabbedLive) {
-          fs.rename(tomb, lock) // best-effort restore of the live lock
-          throw new IllegalArgumentException(
-            s"compactBandIndex: lost the supersede race for $lock — a " +
-              "concurrent compaction re-created it live; folds must be " +
-              "serialized")
-        }
-        fs.delete(tomb, true)
-      }
-      // rename failed → another compactor superseded the stale lock
-      // first; fall through — the create-if-absent below arbitrates
-    }
-    val out = try fs.create(lock, false) catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"compactBandIndex: lost the lock race for $lock — another " +
-            "compaction created it concurrently; folds must be serialized",
-          e)
-    }
-    try out.write(owner.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // post-write ownership verify: on a FileSystem without atomic
-    // create-if-absent (local FS), two creates can both "succeed" —
-    // last writer's content wins, so re-reading arbitrates: at most
-    // one invocation sees its own token and proceeds to fold
-    if (readLockOwner(fs, lock) != owner)
-      throw new IllegalArgumentException(
-        s"compactBandIndex: lock $lock is not ours after acquisition — " +
-          "another compaction overwrote it concurrently; folds must be " +
-          "serialized")
-    val heartbeat = lockHeartbeat(fs, lock, lockStaleMs)
-    try {
-      recoverCompactedBase(spark, indexPath)
-      // a stale or incomplete half-write is deleted HERE, not in the
-      // probe-path recovery: compactions are serialized with each
-      // other by the lock above, so no in-flight fold can own this
-      // .compact_next (see recoverCompactedBase's rename-only note)
-      if (fs.exists(next)) fs.delete(next, true)
-      val consumed = fs.listStatus(root).toSeq.map(_.getPath)
-        .filter(p => batchDirId(p.getName).exists(_ < uptoBatch))
-      if (consumed.isEmpty || consumed.forall(_.getName == "batch=-1")) return
-      // crash-mid-delete remnants are exact-row duplicates of base rows:
-      // the distinct removes them, so the base cannot inflate across
-      // crash cycles
-      spark.read.option("basePath", indexPath)
-        .parquet(consumed.map(_.toString): _*)
-        .drop("batch")
-        .distinct()
-        .write.mode("overwrite").parquet(next.toString)
-      publishStaged(fs, next, base)
-      consumed.filter(_.getName != "batch=-1").foreach(p => fs.delete(p, true))
-    } finally {
-      heartbeat.interrupt(); heartbeat.join()
-      releaseLockIfOwned(fs, lock, owner)
-    }
+    recoverCompactedBase(spark, indexPath)
+    // a stale or incomplete half-write, which the rename-only recovery
+    // above leaves in place
+    if (fs.exists(next)) fs.delete(next, true)
+    val consumed = fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(p => batchDirId(p.getName).exists(_ < uptoBatch))
+    if (consumed.forall(_.getName == "batch=-1")) return
+    // crash-mid-delete remnants are exact-row duplicates of base rows:
+    // the distinct removes them, so the base cannot inflate across
+    // crash cycles
+    spark.read.option("basePath", indexPath)
+      .parquet(consumed.map(_.toString): _*)
+      .drop("batch")
+      .distinct()
+      .write.mode("overwrite").parquet(next.toString)
+    publishStaged(fs, next, base)
+    consumed.filter(_.getName != "batch=-1").foreach(p => fs.delete(p, true))
   }
-
-  /** Daemon thread refreshing `lock`'s mtime every `lockStaleMs / 3`
-    * while the fold runs, so LIVENESS — not elapsed time — drives the
-    * staleness bound: a legitimate fold longer than `lockStaleMs` (a
-    * 100 TB fold) stays fresh and keeps refusing probes/compactors,
-    * while a crashed fold's lock stops being touched and goes stale
-    * within one bound as before. Interrupted (and joined) in the
-    * fold's finally BEFORE release, so a touch can never resurrect a
-    * just-released lock path. Touch failures are swallowed: the lock
-    * may legitimately disappear mid-fold if a superseder raced us
-    * (the ownership-checked release already covers that arm), and a
-    * transient FS error must not kill the heartbeat — the next tick
-    * retries. */
-  private[graft] def lockHeartbeat(fs: FileSystem, lock: Path,
-                                   lockStaleMs: Long): Thread = {
-    val t = new Thread(() => {
-      val interval = math.max(lockStaleMs / 3, 50L)
-      try while (!Thread.currentThread().isInterrupted) {
-        Thread.sleep(interval)
-        try fs.setTimes(lock, System.currentTimeMillis(), -1L)
-        catch { case _: java.io.IOException => () }
-      } catch { case _: InterruptedException => () }
-    }, s"compact-lock-heartbeat-${lock.getParent.getName}")
-    t.setDaemon(true)
-    t.start()
-    t
-  }
-
-  /** Release `.compact_lock` only if WE still own it: a fold that
-    * outlived [[CompactLockStaleMs]] may have been superseded by
-    * another compactor — unconditionally deleting on exit would remove
-    * the successor's LIVE lock and reopen the probe race it guards.
-    * (The superseded fold's own swap is still hazardous — that is the
-    * documented cost of running past the staleness bound — but its
-    * exit must not widen the damage.) */
-  private[graft] def releaseLockIfOwned(fs: FileSystem, lock: Path,
-                                        owner: String): Unit =
-    if (readLockOwner(fs, lock) == owner) fs.delete(lock, true)
 
   /** Parse a `batch=<id>` dir name; None for anything else, including
     * a non-numeric suffix (an operator's stray `batch=0.bak`). Shared
@@ -1041,50 +730,41 @@ object CorpusStream {
   }
 
   /** The streaming skeleton of both band-index sinks
-    * ([[admissionSink]], [[ccMaintenanceSink]]): `process(batch,
-    * batchId, streamId)` runs each NON-EMPTY micro-batch, `streamId`
-    * being the checkpoint's query id ([[StreamIdMemo]]), which owns the
-    * sink's own folds and lets its probe recognize a lock its crashed
-    * fold left. With `compactEvery > 0` the batch then folds the index
-    * whenever `compactEvery` strictly-earlier per-batch dirs have
-    * accumulated unfolded ([[pendingBatchDirs]] — a dir-count trigger,
-    * so empty micro-batches cannot defer the fold past the bound); see
-    * [[ccMaintenanceSink]] for why the in-batch fold is safe. */
+    * ([[admissionSink]], [[ccMaintenanceSink]]), and the only caller of
+    * [[compactBandIndex]]: `process(batch, batchId)` runs each
+    * NON-EMPTY micro-batch. With `compactEvery > 0` the batch then
+    * folds the index whenever `compactEvery` strictly-earlier
+    * per-batch dirs have accumulated unfolded ([[pendingBatchDirs]] —
+    * a dir-count trigger, so empty micro-batches cannot defer the fold
+    * past the bound); see [[ccMaintenanceSink]] for why the in-batch
+    * fold is safe. */
   private def bandIndexSink(docs: DataFrame, indexPath: String, checkpoint: String,
-                            sinkName: String, compactEvery: Int, lockStaleMs: Long)(
-      process: (DataFrame, Long, String) => Unit): StreamingQuery = {
-    val streamIdMemo = new StreamIdMemo(sinkName, checkpoint)
+                            compactEvery: Int)(
+      process: (DataFrame, Long) => Unit): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val streamId = streamIdMemo.get(spark)
-          process(batch, batchId, streamId)
+          process(batch, batchId)
           if (compactEvery > 0 &&
               pendingBatchDirs(spark, indexPath, batchId) >= compactEvery)
-            compactBandIndex(spark, indexPath, batchId, owner = streamId,
-              lockStaleMs = lockStaleMs)
+            compactBandIndex(spark, indexPath, batchId)
         }
       }
       .start()
-  }
 
   /** The probe preamble of both band-index sinks: None while no index
-    * exists (nothing earlier can match). Otherwise refuse to scan
-    * THROUGH an in-flight external fold ([[checkCompactLock]]), then
-    * recover a base that a fold crashed between delete(base) and the
-    * swap would hide ([[recoverCompactedBase]]), and return the
-    * replay-stable prior index: strictly earlier batches
-    * ([[readPriorIndex]]). */
+    * exists (nothing earlier can match). Otherwise recover a base that
+    * a fold crashed between delete(base) and the swap would hide
+    * ([[recoverCompactedBase]]), and return the replay-stable prior
+    * index: strictly earlier batches ([[readPriorIndex]]). */
   private def probePriorIndex(spark: SparkSession, indexPath: String, batchId: Long,
-                              selfOwner: Option[String], lockStaleMs: Long,
                               schema: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[DataFrame] = {
     val root = new Path(indexPath)
     if (!fsFor(spark, root).exists(root)) None
     else {
-      checkCompactLock(spark, indexPath, selfOwner, lockStaleMs)
       recoverCompactedBase(spark, indexPath)
       Some(readPriorIndex(spark, indexPath, batchId, schema))
     }
@@ -1126,15 +806,16 @@ object CorpusStream {
     * `compactEvery > 0` self-compacts the band index
     * ([[bandIndexSink]]); the admission probe tolerates the
     * crash-mid-delete duplicate window by its DISTINCT rejected-ids
-    * contract. */
+    * contract. The sink is its index's only compactor: no other
+    * application can fold a stopped stream's index. To fold one,
+    * restart the sink with `compactEvery = 1`; its first non-empty
+    * batch folds every committed dir. */
   def admissionSink(docs: DataFrame, indexPath: String, corpusPath: String,
                     checkpoint: String, n: Int = 3, bands: Int = 8,
                     rowsPerBand: Int = 4, minEstJaccard: Double = 0.5,
-                    compactEvery: Int = 0,
-                    lockStaleMs: Long = CompactLockStaleMs)
+                    compactEvery: Int = 0)
       : StreamingQuery =
-    bandIndexSink(docs, indexPath, checkpoint, "admissionSink", compactEvery,
-        lockStaleMs) { (batch, batchId, streamId) =>
+    bandIndexSink(docs, indexPath, checkpoint, compactEvery) { (batch, batchId) =>
       val spark = batch.sparkSession
       val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
       // the batch's band rows, computed ONCE for the admission
@@ -1146,8 +827,7 @@ object CorpusStream {
       // rest: the index is scanned once and never shuffled, nor are the
       // batch's doc_ids or text. An empty prior read rejects nothing, so
       // it needs no probe job
-      val adm = probePriorIndex(spark, indexPath, batchId, Some(streamId),
-          lockStaleMs, Some(AdmissionIndexSchema))
+      val adm = probePriorIndex(spark, indexPath, batchId, Some(AdmissionIndexSchema))
         .fold(b)(prior => b.join(broadcast(graft.dedup.Dedup.rejectedIds(
           prior, broadcast(batchBands), bands * rowsPerBand, minEstJaccard)),
           Seq("doc_id"), "left_anti"))
@@ -1242,10 +922,7 @@ object CorpusStream {
   private[graft] def ccProcessBatch(batch: DataFrame, batchId: Long,
                                     indexPath: String, statePath: String,
                                     n: Int, bands: Int, rowsPerBand: Int,
-                                    t: CcStageTimer = CcNoTimer,
-                                    selfOwner: Option[String] = None,
-                                    lockStaleMs: Long = CompactLockStaleMs)
-      : Unit = {
+                                    t: CcStageTimer = CcNoTimer): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     // band: fingerprint the batch
@@ -1270,7 +947,7 @@ object CorpusStream {
     // shuffle; an unrestricted groupBy here would shuffle the
     // whole corpus-sized index every micro-batch
     val repEdges = t("probe") {
-      probePriorIndex(spark, indexPath, batchId, selfOwner, lockStaleMs)
+      probePriorIndex(spark, indexPath, batchId)
         .fold(Seq.empty[(Long, Long)].toDF("u", "v"))(
           ccProbeRepEdges(_, newBands, alias).localCheckpoint())
     }
@@ -1415,8 +1092,8 @@ object CorpusStream {
     * empty micro-batch (which skips the body and writes no dir)
     * cannot defer a due fold past the bound, it merely doesn't add to
     * it. The fold runs INSIDE foreachBatch, which Structured
-    * Streaming serializes with commits and probes, so the races the
-    * external guard refuses cannot occur here; the bound is
+    * Streaming serializes with the sink's commits and probes, so no
+    * probe can read a layout mid-fold; the bound is
     * `uptoBatch = batchId` — inside batch `batchId` every earlier batch
     * is committed and the current batch's dir is excluded, which is
     * exactly `committedHighWater + 1` whether this attempt is the first
@@ -1433,16 +1110,18 @@ object CorpusStream {
     * 334 batches → 668 files, 3.65 s probe; folded: 2 files, 0.47 s —
     * SCALE.md, "One flat band-index layout"), so set `compactEvery` to
     * fold before per-batch dirs reach the hundreds; 0 (default)
-    * disables self-compaction and leaves cadence to the operator via
-    * the guarded external entry. */
+    * disables self-compaction.
+    *
+    * The sink is its index's only writer and only compactor, so no
+    * other application can fold a stopped stream's index. To fold one,
+    * restart the sink with `compactEvery = 1`: its first non-empty
+    * batch folds every committed dir (q232 grades a stop → resume
+    * across a folded index). */
   def ccMaintenanceSink(docs: DataFrame, indexPath: String, statePath: String,
                         checkpoint: String, n: Int = 3, bands: Int = 8,
-                        rowsPerBand: Int = 4, compactEvery: Int = 0,
-                        lockStaleMs: Long = CompactLockStaleMs)
+                        rowsPerBand: Int = 4, compactEvery: Int = 0)
       : StreamingQuery =
-    bandIndexSink(docs, indexPath, checkpoint, "ccMaintenanceSink", compactEvery,
-        lockStaleMs) { (batch, batchId, streamId) =>
-      ccProcessBatch(batch, batchId, indexPath, statePath, n, bands, rowsPerBand,
-        selfOwner = Some(streamId), lockStaleMs = lockStaleMs)
+    bandIndexSink(docs, indexPath, checkpoint, compactEvery) { (batch, batchId) =>
+      ccProcessBatch(batch, batchId, indexPath, statePath, n, bands, rowsPerBand)
     }
 }

@@ -823,10 +823,10 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(byDoc(2L) == 2L && byDoc(102L) == 2L,
       "a post-compaction merge must relabel a group that lives in the base")
     // second compaction absorbs the duplicated dir and the new batch,
-    // via the safe-by-default overload that derives uptoBatch from the
-    // checkpoint's commits (3 committed batches -> high water 2)
+    // under the bound the sink's own fold would take: the checkpoint's
+    // committed high water + 1 (3 committed batches -> high water 2)
     assert(CorpusStream.committedHighWater(spark, ckpt) == 2L)
-    CorpusStream.compactBandIndex(spark, idx, ckpt)
+    CorpusStream.compactBandIndex(spark, idx, 3L)
     assert(dirsUnder(idx) == Seq("batch=-1"))
     assert(CorpusStream.readCcState(spark, state)
       .select("doc_id", "group_id")
@@ -864,7 +864,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     try {
       mem.addData((1L, d1), (2L, d2)); q1.processAllAvailable()
     } finally q1.stop()
-    CorpusStream.compactBandIndex(spark, idx, ckpt) // derived uptoBatch = 1
+    CorpusStream.compactBandIndex(spark, idx, 1L) // committed high water + 1
     val q2 = start()
     try {
       // 11 near-dups doc 1 whose band rows now live ONLY in the base
@@ -880,11 +880,12 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
   test("maintainedCcGroupsCompacted (q232): compact+resume lifecycle equals " +
       "the uncompacted graded replay") {
     import graft.stream.CorpusStream
-    // near-dup pairs chosen to SPAN the compaction boundary of the
-    // 3-batch residue schedule with compactAfter=2: 9 (batch 0) ~ 10
-    // (batch 1) merge pre-compaction; 3 and 5 (batch 2, post-resume)
+    // near-dup pairs chosen to SPAN the stop of the 3-batch residue
+    // schedule with compactAfter=2: the self-folding sink (compactEvery=1)
+    // folds batch 0 inside batch 1 and stops; 9 (batch 0) ~ 10 (batch 1)
+    // merge before the stop; 3 and 5 (batch 2, the first resumed batch)
     // near-dup 9 and 10 with SMALLER ids, forcing relabels of groups
-    // whose band rows live only in the compacted base
+    // whose band rows live only in the base folded before the stop
     val dA  = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val dA2 = dA.replace("kappa", "lambda") // ~dA
     val dB  = "one two three four five six seven eight nine ten"
@@ -904,47 +905,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "a post-compaction arrival must relabel a group folded into the base")
     assert(byDoc(4L) == 3L && byDoc(3L) == 3L,
       "cross-boundary merges onto smaller post-resume ids must resolve")
-  }
-
-  test("compactBandIndex: REFUSES while a streaming query is active on the " +
-      "checkpoint; compacts once stopped; a restart re-arms the guard") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_guard")
-    val (idx, state, ckpt) = (s"$dir/idx", s"$dir/state", s"$dir/ckpt")
-    implicit val sctx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    def start() = CorpusStream.ccMaintenanceSink(
-      mem.toDF().toDF("doc_id", "text"), idx, state, ckpt, 3, 8, 4)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val q1 = start()
-    try {
-      mem.addData((1L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2L, "one two three four five six seven eight"))
-      q1.processAllAvailable()
-      val e = intercept[IllegalArgumentException] {
-        CorpusStream.compactBandIndex(spark, idx, ckpt)
-      }
-      assert(e.getMessage.contains("ACTIVE"), e.getMessage)
-      // the refusal must happen BEFORE any mutation: per-batch dir intact
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/batch=0")),
-        "a refused compaction must leave the index untouched")
-    } finally q1.stop()
-    // stopped: the IDENTICAL call now compacts
-    CorpusStream.compactBandIndex(spark, idx, ckpt)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/batch=-1")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$idx/batch=0")),
-      "after the sink stops the same call must fold")
-    // a RESTART re-arms the guard — the id matched is the CHECKPOINT's
-    // persisted query id, stable across restarts, not the stopped handle
-    val q2 = start()
-    try {
-      mem.addData((3L, "nine ten eleven twelve thirteen fourteen"))
-      q2.processAllAvailable()
-      intercept[IllegalArgumentException] {
-        CorpusStream.compactBandIndex(spark, idx, ckpt)
-      }
-    } finally q2.stop()
   }
 
   test("ccMaintenanceSink compactEvery: the sink self-compacts mid-stream and " +
@@ -1008,7 +968,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       mem.addData((9L, dA), (12L, "unrelated words about streaming engines"))
       q1.processAllAvailable()
     } finally q1.stop()
-    CorpusStream.compactBandIndex(spark, idx, ckpt)
+    CorpusStream.compactBandIndex(spark, idx, 1L) // committed high water + 1
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val base = new org.apache.hadoop.fs.Path(s"$idx/batch=-1")
@@ -1178,256 +1138,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       s"resolution must still equal batch CC:\n got=$got\nwant=$want")
   }
 
-  /** The two band-index sinks, as inputs of the specs that hold for
-    * both: `start(docs, index, output, checkpoint)`, and `groups(output)`,
-    * the sink's output as doc id → group id (admission: each admitted
-    * doc is its own group, a rejected doc is absent). */
-  private case class BandSink(
-      name: String,
-      start: (org.apache.spark.sql.DataFrame, String, String, String) =>
-        org.apache.spark.sql.streaming.StreamingQuery,
-      groups: String => Map[Long, Long])
-
-  private lazy val bandSinks = Seq(
-    BandSink("ccMaintenanceSink",
-      graft.stream.CorpusStream.ccMaintenanceSink(_, _, _, _, 3, 8, 4),
-      out => graft.stream.CorpusStream.readCcState(spark, out)
-        .as[(Long, Long)].collect().toMap),
-    BandSink("admissionSink",
-      graft.stream.CorpusStream.admissionSink(_, _, _, _, 3, 8, 4, 0.5),
-      out => spark.read.parquet(out).select("doc_id").as[Long]
-        .collect().map(d => d -> d).toMap))
-
-  test("a fresh foreign .compact_lock makes the probe REFUSE loudly; a " +
-      "stale one (crashed compactor) is passed without wedging the sink") {
-    import graft.stream.CorpusStream
-    bandSinks.foreach { sink =>
-      val dir = tempDir("graft_cc_lock")
-      val (idx, out, ckpt) = (s"$dir/idx", s"$dir/out", s"$dir/ckpt")
-      implicit val sctx = spark.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      def start() = sink.start(mem.toDF().toDF("doc_id", "text"), idx, out, ckpt)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-      val q1 = start()
-      try { mem.addData((9L, dA)); q1.processAllAvailable() } finally q1.stop()
-      // an external fold IN FLIGHT: fresh lock, foreign owner — the exact
-      // window the same-session running-sink guard cannot see (a sink
-      // (re)started during the fold, possibly in another application)
-      val lock = CorpusStream.compactLockPath(idx)
-      val lockOut = fs.create(lock, true)
-      lockOut.write("external:other-process".getBytes("UTF-8")); lockOut.close()
-      val q2 = start()
-      try {
-        mem.addData((4L, "one two three four five six seven eight"))
-        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q2.processAllAvailable()
-        }
-        assert(e.getMessage.contains("IN FLIGHT"),
-          s"${sink.name}: the probe must refuse with the lock message, got: ${e.getMessage}")
-      } finally q2.stop()
-      assert(fs.exists(lock), s"${sink.name}: a refusal must not touch the foreign lock")
-      // age the lock past the staleness bound: a CRASHED compactor must
-      // not wedge the sink forever — the replayed batch now proceeds
-      fs.setTimes(lock,
-        System.currentTimeMillis() - CorpusStream.CompactLockStaleMs - 1000L, -1L)
-      val q3 = start()
-      try q3.processAllAvailable() finally q3.stop() // replays the failed batch
-      assert(fs.exists(lock),
-        s"${sink.name}: the probe path is read-only on foreign locks — cleanup " +
-          "belongs to the next compactBandIndex")
-      val byDoc = sink.groups(out)
-      assert(byDoc.keySet == Set(9L, 4L),
-        s"${sink.name}: the replay past the stale lock must commit batch 1: $byDoc")
-      // and the next compaction supersedes the stale lock and cleans it
-      CorpusStream.compactBandIndex(spark, idx, ckpt)
-      assert(!fs.exists(lock), s"${sink.name}: compaction must clean a stale lock")
-    }
-  }
-
-  test("a sink's OWN crashed-fold lock is self-recovered by the next probe") {
-    import graft.stream.CorpusStream
-    // doc 20 near-dups doc 9: the CC sink merges it into 9's group, the
-    // admission sink rejects it
-    val want = Map("ccMaintenanceSink" -> Map(9L -> 9L, 20L -> 9L),
-      "admissionSink" -> Map(9L -> 9L))
-    bandSinks.foreach { sink =>
-      val dir = tempDir("graft_cc_ownlock")
-      val (idx, out, ckpt) = (s"$dir/idx", s"$dir/out", s"$dir/ckpt")
-      implicit val sctx = spark.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      def start() = sink.start(mem.toDF().toDF("doc_id", "text"), idx, out, ckpt)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val dA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-      val q1 = start()
-      try { mem.addData((9L, dA)); q1.processAllAvailable() } finally q1.stop()
-      // simulate a crash INSIDE a self-compaction: the lock is held by
-      // this stream's own (checkpoint-persisted) query id and is FRESH —
-      // a foreign-lock refusal here would wedge crash recovery for the
-      // whole staleness bound; the probe must recognize itself instead
-      // (its own folds are serialized with it inside foreachBatch, so no
-      // live compactor can hold this lock)
-      val qid = CorpusStream.checkpointQueryId(spark, ckpt).get
-      val lock = CorpusStream.compactLockPath(idx)
-      val lockOut = fs.create(lock, true)
-      lockOut.write(qid.getBytes("UTF-8")); lockOut.close()
-      val q2 = start()
-      try {
-        mem.addData((20L, dA.replace("kappa", "lambda")))
-        q2.processAllAvailable() // must NOT refuse
-      } finally q2.stop()
-      assert(!fs.exists(lock), s"${sink.name}: the probe must clear its own crashed-fold lock")
-      val byDoc = sink.groups(out)
-      assert(byDoc == want(sink.name),
-        s"${sink.name}: the recovered probe must still reach its decision: $byDoc")
-    }
-  }
-
-  test("compactBandIndex: a fresh foreign lock refuses a second compactor; " +
-      "a stale one is superseded") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_lockfold")
-    implicit val sctx = spark.sqlContext
-    Seq((1L, 0, 5L, 1L), (2L, 1, 300L, 2L)).toDF("doc_id", "band", "bucket", "g0")
-      .write.parquet(s"$dir/batch=0")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val lock = CorpusStream.compactLockPath(dir)
-    val out = fs.create(lock, true)
-    out.write("external:live-compactor".getBytes("UTF-8")); out.close()
-    val e = intercept[IllegalArgumentException] {
-      CorpusStream.compactBandIndex(spark, dir, 1L)
-    }
-    assert(e.getMessage.contains("another compaction holds"), e.getMessage)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=0")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=-1")),
-      "a refused fold must leave the index untouched")
-    // stale = crashed: the new invocation supersedes it and folds
-    fs.setTimes(lock,
-      System.currentTimeMillis() - CorpusStream.CompactLockStaleMs - 1000L, -1L)
-    CorpusStream.compactBandIndex(spark, dir, 1L)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=-1")) &&
-      !fs.exists(lock),
-      "a stale lock must be superseded and released after the fold")
-  }
-
-  test("compact lock release is ownership-checked: a superseded fold must " +
-      "not delete its successor's live lock") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_lockown")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val lock = CorpusStream.compactLockPath(dir)
-    val out = fs.create(lock, true)
-    out.write("external:successor".getBytes("UTF-8")); out.close()
-    // the exact call compactBandIndex's finally makes when a fold that
-    // outlived the staleness bound exits after being superseded
-    CorpusStream.releaseLockIfOwned(fs, lock, "external:superseded-fold")
-    assert(fs.exists(lock),
-      "a foreign live lock must survive another fold's exit")
-    CorpusStream.releaseLockIfOwned(fs, lock, "external:successor")
-    assert(!fs.exists(lock), "the owner's own release must delete the lock")
-  }
-
-  test("lockStaleMs is a knob: a raised bound keeps a long-running fold's " +
-      "lock refusing probes and compactors the default would call stale") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_staleknob")
-    implicit val sctx = spark.sqlContext
-    Seq((1L, 0, 5L, 1L), (2L, 1, 300L, 2L)).toDF("doc_id", "band", "bucket", "g0")
-      .write.parquet(s"$dir/batch=0")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val lock = CorpusStream.compactLockPath(dir)
-    val out = fs.create(lock, true)
-    out.write("external:long-fold".getBytes("UTF-8")); out.close()
-    // a fold 40 min in: past the 30 min default, inside a raised 2 h bound
-    fs.setTimes(lock,
-      System.currentTimeMillis() - CorpusStream.CompactLockStaleMs - 600000L, -1L)
-    val twoHours = 2L * 60L * 60L * 1000L
-    val e = intercept[IllegalStateException] {
-      CorpusStream.checkCompactLock(spark, dir, None, lockStaleMs = twoHours)
-    }
-    assert(e.getMessage.contains("IN FLIGHT"),
-      s"the raised bound must keep refusing probes: ${e.getMessage}")
-    val e2 = intercept[IllegalArgumentException] {
-      CorpusStream.compactBandIndex(spark, dir, 1L, lockStaleMs = twoHours)
-    }
-    assert(e2.getMessage.contains("another compaction holds"), e2.getMessage)
-    assert(fs.exists(lock) && CorpusStream.readLockOwner(fs, lock)
-      == "external:long-fold",
-      "a refused compactor must leave the long fold's lock in place")
-    // under the DEFAULT bound the same lock is a crashed compactor:
-    // probe passes, fold supersedes — and the rename-based supersede
-    // must leave no tombstone behind
-    CorpusStream.checkCompactLock(spark, dir, None)
-    CorpusStream.compactBandIndex(spark, dir, 1L)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=-1")) &&
-      !fs.exists(lock), "the default bound must supersede and fold")
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .exists(_.getPath.getName.startsWith(".compact_lock.tomb")),
-      "the supersede tombstone must not outlive the fold")
-  }
-
-  test("the fold heartbeats its lock: liveness, not elapsed time, drives " +
-      "staleness; a stopped heartbeat lets the lock go stale again") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_heartbeat")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val lock = CorpusStream.compactLockPath(dir)
-    val out = fs.create(lock, true)
-    out.write("external:live-long-fold".getBytes("UTF-8")); out.close()
-    val staleMs = 1500L // interval = max(staleMs/3, 50) = 500 ms
-    val aged = System.currentTimeMillis() - 10L * staleMs
-    fs.setTimes(lock, aged, -1L)
-    // pre-heartbeat sanity: the aged, un-heartbeated lock reads as
-    // stale under this bound — the probe passes without throwing
-    CorpusStream.checkCompactLock(spark, dir, None, lockStaleMs = staleMs)
-    val hb = CorpusStream.lockHeartbeat(fs, lock, staleMs)
-    try {
-      // poll until a touch lands (bounded — one interval is 500 ms)
-      val deadline = System.currentTimeMillis() + 10000L
-      while (fs.getFileStatus(lock).getModificationTime <= aged &&
-             System.currentTimeMillis() < deadline) Thread.sleep(100L)
-      assert(fs.getFileStatus(lock).getModificationTime > aged,
-        "the heartbeat must refresh the lock's mtime")
-      // a probe under the SAME small bound now refuses: the fold is live
-      val e = intercept[IllegalStateException] {
-        CorpusStream.checkCompactLock(spark, dir, None, lockStaleMs = staleMs)
-      }
-      assert(e.getMessage.contains("IN FLIGHT"), e.getMessage)
-    } finally { hb.interrupt(); hb.join() }
-    // heartbeat stopped (the crash case): the lock ages out once more
-    fs.setTimes(lock, System.currentTimeMillis() - 10L * staleMs, -1L)
-    Thread.sleep(2L * staleMs) // a leaked ticker would re-touch it here
-    CorpusStream.checkCompactLock(spark, dir, None, lockStaleMs = staleMs)
-    assert(fs.exists(lock), "the stale pass-through is read-only")
-  }
-
-  test("a zero-byte .compact_lock (compactor mid-acquisition) still refuses " +
-      "probes while fresh") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_emptylock")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val lock = CorpusStream.compactLockPath(dir)
-    fs.create(lock, true).close() // created, owner not yet written
-    val e = intercept[IllegalStateException] {
-      CorpusStream.checkCompactLock(spark, dir, None)
-    }
-    assert(e.getMessage.contains("IN FLIGHT"),
-      s"a fresh empty lock is a fold mid-acquisition, not absence: ${e.getMessage}")
-    // (the other empty-owner arm — lock DELETED between the stat and the
-    // owner read — re-checks existence and proceeds; it is inherently an
-    // interleaving and is pinned by the code path, not a race replay)
-  }
-
   test("foreign batch= entries under the index root: trigger and fold agree " +
       "(neither counts them, the fold does not throw)") {
     import graft.stream.CorpusStream
@@ -1453,28 +1163,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=-1")),
       "the numeric dir must fold")
     assert(fs.exists(foreign), "the foreign entry is left alone")
-  }
-
-  test("StreamIdMemo resolves the checkpoint query id once and caches it " +
-      "for the sink's lifetime") {
-    import graft.stream.CorpusStream
-    val dir = tempDir("graft_cc_memo")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(s"$dir/metadata")
-    val out = fs.create(meta, true)
-    out.write("""{"id":"11111111-2222-3333-4444-555555555555"}""".getBytes("UTF-8"))
-    out.close()
-    val memo = new CorpusStream.StreamIdMemo("spec", dir)
-    assert(memo.get(spark) == "11111111-2222-3333-4444-555555555555")
-    // deleting the metadata file proves later calls never re-read it:
-    // the per-batch hot path pays the small-file read exactly once
-    fs.delete(meta, true)
-    assert(memo.get(spark) == "11111111-2222-3333-4444-555555555555",
-      "the memo must serve the cached id without re-reading metadata")
-    val fresh = new CorpusStream.StreamIdMemo("spec", dir)
-    val e = intercept[RuntimeException] { fresh.get(spark) }
-    assert(e.getMessage.contains("no query id"), e.getMessage)
   }
 
   test("streaming HLL maintenance: merged registers equal the batch sketch, survive restart") {
